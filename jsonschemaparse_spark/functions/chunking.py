@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..idioms import bind_once
+
 
 def chunk_documents(
     df: DataFrame,
@@ -65,9 +67,7 @@ def chunk_documents(
 
     # bind the split array once per row inside the generator (see module
     # docstring); the explode emits the prebuilt structs
-    gen = F.explode(
-        F.element_at(
-            F.transform(F.array(F.split(t, r"\s+")), windows), 1))
+    gen = F.explode(bind_once(F.split(t, r"\s+"), windows))
     return (
         df.filter(F.col(text_col).isNotNull() & (F.length(t) > 0))
         .select(F.col(id_col), gen.alias("_c"))

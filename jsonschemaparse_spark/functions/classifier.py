@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..idioms import ensure_parallelism
+
 TWO_32 = float(1 << 32)
 
 
@@ -90,14 +92,12 @@ def classify_quality(df: DataFrame, text_col: str = "text",
     fringe below the threshold (np.random.pareto); the deterministic
     engine equivalent is composing this with
     sampling.deterministic_sample over the rejected stratum."""
-    from ..plans.json_validator import _ensure_parallelism
-
     # r7: the per-token scoring aggregate is interpreted
     # (CodegenFallback), so a few-split parquet input serializes the
     # scan onto a couple of cores. Spread few-split inputs (measured at
     # sf1.0 on a 2-split input: 7.2 s -> 1.2 s); real multi-split
     # corpora pass through shuffle-free.
-    df = _ensure_parallelism(df)
+    df = ensure_parallelism(df)
     s = quality_score(F.col(text_col), weights, seed)
     return (df.withColumn(score_col, s)
             .withColumn(keep_col, F.col(score_col) > F.lit(threshold)))

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..idioms import bind_once, ensure_parallelism
 from .dedup import normalized_text
 
 CONTAMINATED_COL = "contaminated"
@@ -62,8 +63,7 @@ def word_ngrams(text: Column, n: int = 13) -> Column:
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    return F.array_distinct(
-        F.element_at(F.transform(F.array(words), _grams), 1))
+    return F.array_distinct(bind_once(words, _grams))
 
 
 def eval_ngram_set(eval_df: DataFrame, text_col: str = "text",
@@ -85,17 +85,15 @@ def contaminated_ids(train_df: DataFrame, eval_df: DataFrame, id_col: str,
     plain distinct; higher thresholds count distinct matched grams per
     doc (a groupBy keyed on doc id — map-side combine applies, and only
     matched rows reach it)."""
-    from ..plans.json_validator import _ensure_parallelism
-
     grams = eval_ngram_set(eval_df, eval_text_col, n)
     # The n-gram HOF Project is interpreted (CodegenFallback), so a
     # single-split input would serialize the whole corpus scan onto one
     # core (NOTES pitfall #4, measured 4.7 s -> 0.6 s at sf0.1).
-    # _ensure_parallelism repartitions ONLY when splits < cores/2 — real
+    # ensure_parallelism repartitions ONLY when splits < cores/2 — real
     # multi-split corpora pass through shuffle-free, and only the
     # two-column (id, text) projection is ever shuffled.
     matches = (
-        _ensure_parallelism(train_df.select(id_col, text_col))
+        ensure_parallelism(train_df.select(id_col, text_col))
         .select(F.col(id_col), F.explode(word_ngrams(F.col(text_col), n)).alias("ngram"))
         .join(F.broadcast(grams), "ngram")
     )

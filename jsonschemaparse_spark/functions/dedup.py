@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..idioms import bind_once, ensure_parallelism
+
 
 def normalized_text(text: Column) -> Column:
     return F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
@@ -138,7 +140,7 @@ def shingles(text: Column, k: int = 3) -> Column:
             ),
         ).otherwise(F.array(F.array_join(w, " ")))
 
-    return F.array_distinct(F.element_at(F.transform(F.array(words), _sh), 1))
+    return F.array_distinct(bind_once(words, _sh))
 
 
 # Universal-hash minhash domain: P = largest prime below 2^48 keeps
@@ -152,6 +154,28 @@ def shingle_hash(s: Column) -> Column:
     """One md5 per shingle -> 48-bit int (portable: DuckDB twin is
     ('0x'||substr(md5(s),1,12))::BIGINT % P)."""
     return F.conv(F.substring(F.md5(F.encode(s, "UTF-8")), 1, 12), 16, 10).cast("long") % MINHASH_P
+
+
+def _shingle_starts(w: Column, k: int) -> Column:
+    """1-based start index of every k-word shingle of the word array `w`;
+    [0] when `w` has fewer than k words, marking the short-text fallback
+    (the whole text is one shingle). Guarding with when() matters under
+    ANSI mode: element_at past the array end raises, and a web corpus
+    always has sub-k-word documents (r5 smoke finding)."""
+    n = F.size(w)
+    return F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
+        F.array(F.lit(0)))
+
+
+def _fast_shingle_hashes(w: Column, k: int) -> Column:
+    """hash_mode='fast' shingle hashes of the word array `w`: xxhash64
+    over each word triple directly, so no shingle STRING is built and no
+    md5 runs; sub-k-word texts hash whole, like the portable path."""
+    return F.transform(_shingle_starts(w, k), lambda j: F.when(
+        j > 0,
+        F.abs(F.xxhash64(*[F.element_at(w, j + i) for i in range(k)]))
+        % MINHASH_P,
+    ).otherwise(F.abs(F.xxhash64(F.array_join(w, " "))) % MINHASH_P))
 
 
 def _minhash_one(sh: Column, perm: int) -> Column:
@@ -179,28 +203,8 @@ def minhash_signature(text: Column, num_hashes: int = 8, k: int = 3,
                    hash+mulmod only. Use at scale; not SQL-reproducible.
     """
     if hash_mode == "fast":
-        words = F.split(normalized_text(text), " ")
-        n = F.size(words)
-        # index 0 marks the short-text fallback (n < k): hash the whole
-        # text, like the portable path. Guarding with when() matters under
-        # ANSI mode — element_at past the array end would raise, and a
-        # web corpus always has sub-k-word documents (r5 smoke finding).
-        idxs = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
-            F.array(F.lit(0))
-        )
-        hs = F.array_distinct(
-            F.transform(
-                idxs,
-                lambda j: F.when(
-                    j > 0,
-                    F.abs(
-                        F.xxhash64(*[F.element_at(words, j + i) for i in range(k)])
-                    ) % MINHASH_P,
-                ).otherwise(
-                    F.abs(F.xxhash64(F.array_join(words, " "))) % MINHASH_P
-                ),
-            )
-        )
+        hs = F.array_distinct(_fast_shingle_hashes(
+            F.split(normalized_text(text), " "), k))
     else:
         hs = F.transform(shingles(text, k), shingle_hash)
     init = F.array(*[F.lit(MINHASH_P).cast("long") for _ in range(num_hashes)])
@@ -215,33 +219,6 @@ def minhash_signature(text: Column, num_hashes: int = 8, k: int = 3,
             for p in range(num_hashes)
         ]),
     )
-
-
-def minhash_signatures_hof(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    num_hashes: int = 8,
-    k: int = 3,
-    hash_mode: str = "portable",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """(doc, sig array) via the per-row HOF expression (minhash_signature).
-
-    The round-1 execution shape, kept selectable for A/B adjudication
-    against minhash_signatures_agg (VERDICT r2 #1): one repartition spreads
-    the narrow (id, text) projection, a second (tiny, num_hashes longs per
-    row) barrier stops CollapseProject from inlining the signature
-    aggregate into every band reference. The per-element lambda is
-    CodegenFallback — interpreted per shingle — which is why the agg shape
-    exists; whether that matters at a given scale is what the paired bench
-    measures (scripts/minhash_ab.py)."""
-    spark = df.sparkSession
-    n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    raw = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t")).repartition(n_parts)
-    return raw.select(
-        F.col("doc"), minhash_signature(F.col("_t"), num_hashes, k, hash_mode).alias("_sig")
-    ).repartition(n_parts)
 
 
 def minhash_signatures_agg(
@@ -259,23 +236,17 @@ def minhash_signatures_agg(
     array_distinct changes nothing), but a different execution shape.
     r5 revision: the per-shingle hash array is built INSIDE the generator
     (words bound once as a lambda variable), so both this shape and the
-    HOF shape now pay interpreted per-shingle lambda evaluation — the
-    agg shape's remaining edge is structural: normalize+split runs once
-    per document (the old explode-then-project form re-ran it per
+    per-row HOF expression pay interpreted per-shingle lambda evaluation
+    — the agg shape's remaining edge is structural: normalize+split runs
+    once per document (the old explode-then-project form re-ran it per
     shingle), the MIN lanes stay inside codegen'd HashAggregate, and
     the map-side partial combine reduces each task's
     shingles to one row per doc BEFORE the exchange, so the shuffle carries
     (doc, num_hashes longs) — strictly less than the repartition barrier
     the HOF formulation needed."""
-    spark = df.sparkSession
-    target = num_partitions or spark.sparkContext.defaultParallelism
-    try:
-        if df.rdd.getNumPartitions() < max(target // 2, 2):
-            # single-split inputs would run the whole explode+partial-agg in
-            # one task; spread the NARROW (id, text) projection first
-            df = df.select(id_col, text_col).repartition(target)
-    except Exception:  # noqa: BLE001 - streaming/plan-only frames
-        pass
+    # single-split inputs would run the whole explode+partial-agg in one
+    # task; spread the NARROW (id, text) projection first
+    df = ensure_parallelism(df.select(id_col, text_col), num_partitions)
     # r5 execution-shape fix: the former (doc, _w, explode(idxs)) select
     # let CollapseProject move the `_w = split(normalize(text))` projection
     # ABOVE the Generate, re-running the regex+split once per exploded
@@ -288,26 +259,15 @@ def minhash_signatures_agg(
     words_expr = F.split(normalized_text(F.col(text_col)), " ")
 
     def _hash_array(w: Column) -> Column:
-        n = F.size(w)
-        # index 0 marks the short-text fallback: whole text, one shingle
-        # (guarding with when() matters under ANSI — element_at past the
-        # array end raises on sub-k-word documents, r5 smoke)
-        idxs = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
-            F.array(F.lit(0)))
         if hash_mode == "fast":
-            # identical hash to minhash_signature hash_mode='fast'
-            return F.transform(idxs, lambda j: F.when(
-                j > 0,
-                F.abs(F.xxhash64(*[F.element_at(w, j + i) for i in range(k)]))
-                % MINHASH_P,
-            ).otherwise(F.abs(F.xxhash64(F.array_join(w, " "))) % MINHASH_P))
-        return F.transform(idxs, lambda j: shingle_hash(
+            return _fast_shingle_hashes(w, k)
+        return F.transform(_shingle_starts(w, k), lambda j: shingle_hash(
             F.when(
                 j > 0,
                 F.concat_ws(" ", *[F.element_at(w, j + i) for i in range(k)]),
             ).otherwise(F.array_join(w, " "))))
 
-    hs = F.element_at(F.transform(F.array(words_expr), _hash_array), 1)
+    hs = bind_once(words_expr, _hash_array)
     d = df.select(F.col(id_col).alias("doc"), F.explode(hs).alias("_h"))
     hcol = F.col("_h")
     lanes = [
@@ -328,18 +288,14 @@ def _banded_rows(
     bands: int,
     k: int,
     hash_mode: str,
-    sig_mode: str,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """(doc, band_id, band_hash): one row per document per band. The ONE
     definition of band layout/hashing — minhash_candidates' skip filter
     and minhash_bucket_overflow's naming view both derive from it, so
     they cannot drift apart (r5 review #7)."""
-    if sig_mode not in ("agg", "hof"):
-        raise ValueError(f"sig_mode must be 'agg' or 'hof', got {sig_mode!r}")
     rows_per_band = num_hashes // bands
-    sig_fn = minhash_signatures_agg if sig_mode == "agg" else minhash_signatures_hof
-    with_sig = sig_fn(
+    with_sig = minhash_signatures_agg(
         df, id_col, text_col, num_hashes, k, hash_mode, num_partitions
     )
     return with_sig.select(
@@ -365,7 +321,6 @@ def minhash_candidates(
     k: int = 3,
     num_partitions: int | None = None,
     hash_mode: str = "portable",
-    sig_mode: str = "agg",
     max_bucket_size: int | None = 500,
     overflow_observation=None,
 ) -> DataFrame:
@@ -400,14 +355,9 @@ def minhash_candidates(
     the agg exchange doubles as the anti-CollapseProject barrier the HOF
     version needed twice. Band extraction reads plain agg attributes
     (SimplifyExtractValueOps: element_at(array(_h...), i) -> _hi).
-
-    sig_mode: 'agg' (default, explode + codegen aggregate) or 'hof'
-    (per-row HOF expression behind repartition barriers). Values are
-    identical; only the execution shape differs — see scripts/minhash_ab.py
-    for the paired-run adjudication of which wins at a given scale.
     """
     banded = _banded_rows(df, id_col, text_col, num_hashes, bands, k,
-                          hash_mode, sig_mode, num_partitions)
+                          hash_mode, num_partitions)
     # r5 execution-shape revision: collect each bucket's doc list and
     # generate the within-bucket pairs IN-PLAN (sorted array + nested
     # transform) instead of self-joining `banded` with itself. The
@@ -497,7 +447,6 @@ def minhash_bucket_overflow(
     bands: int = 4,
     k: int = 3,
     hash_mode: str = "portable",
-    sig_mode: str = "agg",
 ) -> DataFrame:
     """(band_id, band_hash, n_docs) for every LSH bucket above the cap —
     the explicit 'what was dropped' view for
@@ -506,7 +455,7 @@ def minhash_bucket_overflow(
     buckets are clusters of near-identical documents; run exact dedup
     first and they disappear."""
     banded = _banded_rows(df, id_col, text_col, num_hashes, bands, k,
-                          hash_mode, sig_mode)
+                          hash_mode)
     return (
         banded.groupBy("band_id", "band_hash")
         .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -531,7 +480,6 @@ def minhash_near_duplicates(
     bands: int = 4,
     k: int = 3,
     hash_mode: str = "portable",
-    sig_mode: str = "agg",
     max_bucket_size: int | None = 500,
     broadcast_candidates: bool = True,
     overflow_observation=None,
@@ -560,7 +508,7 @@ def minhash_near_duplicates(
     broadcast limits, pass False and accept the one-time corpus shuffle,
     or tighten the cap/threshold first."""
     cands = minhash_candidates(df, id_col, text_col, num_hashes, bands, k,
-                               hash_mode=hash_mode, sig_mode=sig_mode,
+                               hash_mode=hash_mode,
                                max_bucket_size=max_bucket_size,
                                overflow_observation=overflow_observation)
     melted = cands.select(
@@ -779,13 +727,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str = "text",
     codegen with map-side combine — the shuffle carries one row of `bits`
     longs per doc. A NULL sentinel token keeps zero-token docs in the
     aggregate (all votes 0 -> simhash 0) without a join-back."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    try:
-        if df.rdd.getNumPartitions() < max(target // 2, 2):
-            df = df.select(id_col, text_col).repartition(target)
-    except Exception:  # noqa: BLE001
-        pass
+    df = ensure_parallelism(df.select(id_col, text_col))
     toks = F.split(normalized_text(F.coalesce(F.col(text_col), F.lit(""))), " ")
     d = df.select(
         F.col(id_col),
@@ -1122,7 +1064,7 @@ def _span_rows(df: DataFrame, id_col: str, text_col: str,
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    spans = F.element_at(F.transform(F.array(norm), _spans), 1)
+    spans = bind_once(norm, _spans)
     return df.select(
         F.col(id_col).alias("_jsp_doc"),
         F.posexplode(spans).alias("_jsp_pos", "_jsp_span"),
@@ -1280,32 +1222,24 @@ def _substring_rows(df: DataFrame, id_col: str, text_col: str, k: int,
     of the single-exchange win; identical values, plan-pinned)."""
     if hash_mode not in ("md5", "fast"):
         raise ValueError(f"hash_mode must be 'md5' or 'fast', got {hash_mode!r}")
-    from ..plans.json_validator import _ensure_parallelism
-
     # the window generator is interpreted (CodegenFallback): a few-split
     # parquet input would serialize it onto a couple of cores (NOTES
     # pitfall #4). Spread the NARROW (id, text) projection only when
     # splits < cores/2 — real multi-split corpora pass through
     # shuffle-free. Measured at sf1.0 (2-split input): 4.0 s -> 0.9 s.
-    df = _ensure_parallelism(df.select(id_col, text_col))
+    df = ensure_parallelism(df.select(id_col, text_col))
     toks = _ws_tokens(text_col)
     # window via concat_ws over k element_at reads — no per-window
     # sub-array allocation in the interpreted path (same-value swap as
     # shingles(); measured 0.84 s -> 0.59 s for this scan at sf1.0, k=8)
-    wins = F.element_at(
+    wins = bind_once(toks, lambda w: F.when(
+        F.size(w) >= k,
         F.transform(
-            F.array(toks),
-            lambda w: F.when(
-                F.size(w) >= k,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(w) - (k - 1)),
-                    lambda i: F.concat_ws(
-                        " ", *[F.element_at(w, i + F.lit(j)) for j in range(k)]),
-                ),
-            ).otherwise(F.array().cast("array<string>")),
+            F.sequence(F.lit(1), F.size(w) - (k - 1)),
+            lambda i: F.concat_ws(
+                " ", *[F.element_at(w, i + F.lit(j)) for j in range(k)]),
         ),
-        1,
-    )
+    ).otherwise(F.array().cast("array<string>")))
     win = F.col("_jsp_w")
     win_hash = F.md5(win) if hash_mode == "md5" else \
         F.xxhash64(win).cast("string")
@@ -1436,34 +1370,26 @@ def remove_duplicate_substrings(
     which the plan test pins."""
     k = min_tokens
     out_col = out_col or text_col
-    from ..plans.json_validator import _ensure_parallelism
-
     covered = _substring_covered(df, id_col, text_col, k, hash_mode)
     # the rebuild expression below is interpreted and runs on df's own
     # splits (covered broadcasts, so the join adds no exchange): spread
     # few-split inputs so touched-doc rebuilds use every core
-    df = _ensure_parallelism(df)
+    df = ensure_parallelism(df)
     toks = _ws_tokens(text_col)
     # evaluated only on join-matched (victim) rows, which have >= k
     # tokens by construction — sequence(0, size-1) never sees size 0.
     # array_join([]) is '' in Spark, so a fully-victim doc rebuilds to
     # '' with no special anchor.
-    rebuilt = F.element_at(
+    rebuilt = bind_once(toks, lambda w: F.array_join(
         F.transform(
-            F.array(toks),
-            lambda w: F.array_join(
-                F.transform(
-                    F.array_except(
-                        F.sequence(F.lit(0), F.size(w) - 1),
-                        F.col("_jsp_cov"),
-                    ),
-                    lambda p: F.element_at(w, p + 1),
-                ),
-                " ",
+            F.array_except(
+                F.sequence(F.lit(0), F.size(w) - 1),
+                F.col("_jsp_cov"),
             ),
+            lambda p: F.element_at(w, p + 1),
         ),
-        1,
-    )
+        " ",
+    ))
     # NULL-SAFE equality on purpose (r7): a plain == join would let
     # InferFiltersFromConstraints push isnotnull(id) into the covered
     # subtree's JOIN branch but not its AGG branch, making the two

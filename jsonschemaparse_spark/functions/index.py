@@ -47,6 +47,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..idioms import bind_once, ensure_parallelism
 from .dedup import norm_tokens as _tokens
 
 
@@ -79,25 +80,16 @@ def build_inverted_index(
     interpreted; a 2-split input serialized the build onto 2 cores —
     measured 6.5 s -> 1.8 s at sf1.0; pass-through on multi-split
     corpora)."""
-    from ..plans.json_validator import _ensure_parallelism
-
-    df = _ensure_parallelism(df.select(id_col, text_col))
-    pos_tok = F.element_at(
+    df = ensure_parallelism(df.select(id_col, text_col))
+    pos_tok = bind_once(_tokens(F.col(text_col)), lambda w: F.when(
+        F.size(w) > 0,
         F.transform(
-            F.array(_tokens(F.col(text_col))),
-            lambda w: F.when(
-                F.size(w) > 0,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(w) - 1),
-                    lambda i: F.struct(
-                        i.cast("int").alias("pos"),
-                        F.element_at(w, i + 1).alias("token")),
-                ),
-            ).otherwise(
-                F.array().cast("array<struct<pos:int,token:string>>")),
+            F.sequence(F.lit(0), F.size(w) - 1),
+            lambda i: F.struct(
+                i.cast("int").alias("pos"),
+                F.element_at(w, i + 1).alias("token")),
         ),
-        1,
-    )
+    ).otherwise(F.array().cast("array<struct<pos:int,token:string>>")))
     exploded = (
         df.select(F.col(id_col).alias("doc"), F.explode(pos_tok).alias("pt"))
         .select("doc", F.col("pt.pos").alias("pos"),
@@ -141,7 +133,15 @@ def materialize_index(index: InvertedIndex, table: str, *,
     serves searches; leave it default for build/join workloads.
 
     Sizing: n_buckets ~ postings_bytes / 256 MB at the target scale
-    (plans/bucketing.py guidance)."""
+    (plans/bucketing.py guidance).
+
+    Reserved names: the swap stages into `<table>__jsp_stage` and
+    `<table>_overflow__jsp_stage` and renames the live tables aside to
+    `<table>__jsp_old` / `<table>_overflow__jsp_old`. Any existing
+    table under one of those four names is dropped, data included. The
+    swap is single-writer: the tableExists -> RENAME sequence is not
+    atomic, so two callers materializing the same `table` at once can
+    interleave and lose one write."""
     from ..plans.bucketing import drop_table_and_location, write_bucketed
 
     spark = index.postings.sparkSession

@@ -48,6 +48,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..idioms import bind_once, ensure_parallelism
 from .dedup import norm_tokens as _tokens
 
 
@@ -62,26 +63,17 @@ def _bigram_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     bigram rows stay within one task either way — the generator emits
     them from one input row — so per-doc float aggregation order in
     scoring is unchanged."""
-    from ..plans.json_validator import _ensure_parallelism
-
-    df = _ensure_parallelism(df.select(id_col, text_col))
-    pairs = F.element_at(
+    df = ensure_parallelism(df.select(id_col, text_col))
+    pairs = bind_once(_tokens(F.col(text_col)), lambda w: F.when(
+        F.size(w) >= 2,
         F.transform(
-            F.array(_tokens(F.col(text_col))),
-            lambda w: F.when(
-                F.size(w) >= 2,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(w) - 1),
-                    lambda i: F.struct(
-                        F.element_at(w, i).alias("w1"),
-                        F.element_at(w, i + 1).alias("w2"),
-                    ),
-                ),
-            ).otherwise(
-                F.array().cast("array<struct<w1:string,w2:string>>")),
+            F.sequence(F.lit(1), F.size(w) - 1),
+            lambda i: F.struct(
+                F.element_at(w, i).alias("w1"),
+                F.element_at(w, i + 1).alias("w2"),
+            ),
         ),
-        1,
-    )
+    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>")))
     return df.select(
         F.col(id_col).alias("_jsp_doc"),
         F.explode(pairs).alias("_jsp_bg"),

@@ -46,6 +46,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..idioms import ensure_parallelism
+
 # C0 controls except \t \n \r, plus DEL. \x0B/\x0C (VT, FF) are stripped
 # here so the collapse step only needs [ \t].
 CONTROL_RE = r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]"
@@ -112,9 +114,7 @@ def normalize_text(
     # chain where the spreading shuffle costs more than it saves (the
     # c4_quality_flags / validate_dataframe measurement).
     if form is not None:
-        from ..plans.json_validator import _ensure_parallelism
-
-        df = _ensure_parallelism(df)
+        df = ensure_parallelism(df)
     out_col = output_col or text_col
     col: Column = F.col(text_col)
     if form is not None:

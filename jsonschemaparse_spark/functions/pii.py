@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..idioms import ensure_parallelism
+
 # RE2-portable (no lookaround, no backrefs, no ambiguous alternation).
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 IPV4_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
@@ -80,9 +82,7 @@ def pii_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     scan otherwise serializes onto the input's split count — measured
     3.0 s -> 0.7 s at sf1.0 on a 2-split input; pass-through on real
     multi-split corpora)."""
-    from ..plans.json_validator import _ensure_parallelism
-
-    df = _ensure_parallelism(df)
+    df = ensure_parallelism(df)
     counts = pii_counts(F.col(text_col))
     out = df
     for name, col in counts.items():
@@ -107,9 +107,7 @@ def redact_pii(df: DataFrame, text_col: str = "text",
                out_col: str | None = None) -> DataFrame:
     """df with `text_col` redacted (in place by default, or into
     `out_col`). Rewriting op: NULL text stays NULL, every row kept."""
-    from ..plans.json_validator import _ensure_parallelism
-
-    df = _ensure_parallelism(df)  # r7: see pii_flags
+    df = ensure_parallelism(df)  # r7: see pii_flags
     return df.withColumn(out_col or text_col, redact_text(F.col(text_col)))
 
 

@@ -52,6 +52,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..idioms import ensure_parallelism
 from .dedup import content_key, normalized_text
 
 # Second-hash salt: any fixed non-null literal distinct from the bare key
@@ -242,14 +243,12 @@ def incremental_dedup(
     snapshot publishes and reused for every batch, so the per-batch cost
     is probe + the positives-only join, never a snapshot pass.
     """
-    from ..plans.json_validator import _ensure_parallelism
-
     out_cols = list(new_df.columns)
     # r7: spread few-split batches before keying/probing — the md5
     # content key + Arrow probe otherwise run on as many cores as the
     # batch has splits (measured 6.6 s -> 3.3 s at sf1.0 on a 4-split
     # events-derived batch; pass-through on well-split batches)
-    new_df = _ensure_parallelism(new_df)
+    new_df = ensure_parallelism(new_df)
     seen_keys = seen_df.select(content_key(F.col(text_col)).alias("_ik"))
     keyed = new_df.withColumn("_ik", content_key(F.col(text_col)))
     if mode == "exact":
@@ -276,8 +275,10 @@ def incremental_dedup(
             # r7: size by ROW count, not approx_count_distinct —
             # build_key_bloom's default sizing pass is a FULL
             # normalize+hash scan of the snapshot before the build pass.
-            # count() is metadata-cheap on parquet; duplicate texts only
-            # OVER-size the bitmap (lower fpp, capped by max_bits), and
+            # count() is metadata-only only when seen_df is a plain file
+            # scan; a filtered or derived snapshot pays a full scan here,
+            # usually still cheaper than that sizing pass. Duplicate texts
+            # only OVER-size the bitmap (lower fpp, capped by max_bits), and
             # the downstream exact anti-join keeps the result identical
             # either way (measured 3.6 s -> 2.9 s at sf1.0).
             expected_items = seen_df.count()

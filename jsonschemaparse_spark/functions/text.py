@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..idioms import bind_once, ensure_parallelism
+
 # BPE-ish token regex: word pieces or single non-space punctuation.
 TOKEN_RE = r"[A-Za-z0-9_]+|[^A-Za-z0-9_\s]"
 
@@ -215,7 +217,7 @@ def _gopher_flag_columns(
             )
             return F.when(total > 0, dup_chars / total).otherwise(F.lit(0.0))
 
-        return F.element_at(F.transform(F.array(arr), _frac), 1)
+        return bind_once(arr, _frac)
 
     cap = char_fraction_max_items
     dup_line_chars = _dup_char_fraction(F.slice(lines, 1, cap))
@@ -284,14 +286,12 @@ def gopher_quality_flags(df: DataFrame, text_col: str = "text",
     shuffle-free scan with all metrics inside whole-stage codegen (the
     per-line lambdas are array HOFs over short arrays, not Python).
 
-    r7: few-split inputs are spread first (_ensure_parallelism — a
+    r7: few-split inputs are spread first (ensure_parallelism — a
     no-op on real multi-split corpora): the metric HOFs are interpreted
     (CodegenFallback), so a 2-split parquet input serialized the whole
     gate onto 2 cores (measured at sf1.0: 4.7 s -> 0.8 s for the fused
     gate after spreading)."""
-    from ..plans.json_validator import _ensure_parallelism
-
-    df = _ensure_parallelism(df)
+    df = ensure_parallelism(df)
     cols, keep = _gopher_flag_columns(F.col(text_col), char_fraction_max_items)
     return df.withColumns({**cols, "gopher_keep": keep})
 
@@ -375,7 +375,7 @@ def gopher_top_ngram_fractions(
                 ),
             ).otherwise(F.array().cast("array<struct<n:int,gram:string>>"))
 
-        return F.element_at(F.transform(F.array(F.col("_w")), _g), 1)
+        return bind_once(F.col("_w"), _g)
 
     gram_arrays = [_gram_array(n) for n in ns]
     grams = base.select(
@@ -456,7 +456,7 @@ def gopher_dup_ngram_fractions(
             ).otherwise(
                 F.array().cast("array<struct<n:int,pos:int,gram:string>>"))
 
-        return F.element_at(F.transform(F.array(F.col("_w")), _g), 1)
+        return bind_once(F.col("_w"), _g)
 
     grams = base.select(
         id_col, F.explode(F.concat(*[_gram_array(n) for n in ns])).alias("g")
@@ -621,8 +621,9 @@ def quality_flags(df: DataFrame, text_col: str = "text",
     costs 0.30 s vs 0.26 s for 1 metric at sf0.1). Here all metric
     columns and both keeps live in a single Project, so the shared
     words/lines/paras subtrees evaluate once per row. What fusion buys,
-    measured honestly (scripts/gate_ab.py, 8 interleaved paired rounds
-    at sf0.1): ONE corpus scan instead of two — the dominant cost at
+    measured honestly (8 interleaved paired rounds at sf0.1 by
+    scripts/gate_ab.py, last held at commit d88f91c; scripts/ab.py runs
+    such A/Bs now): ONE corpus scan instead of two — the dominant cost at
     100 TB — plus the shared-tokenization CSE; the residual compute is
     gopher + C4's own unique work (sentence splits etc.), i.e. fused
     0.93 s vs gopher 0.79 + c4 0.15 (fused/sum 0.91, fused/gopher
@@ -640,9 +641,7 @@ def quality_flags(df: DataFrame, text_col: str = "text",
     # light regexp work where the shuffle is net-negative (see the
     # c4_quality_flags note)
     if gopher:
-        from ..plans.json_validator import _ensure_parallelism
-
-        df = _ensure_parallelism(df)
+        df = ensure_parallelism(df)
     cols: dict[str, Column] = {}
     keep = F.lit(True)
     if gopher:

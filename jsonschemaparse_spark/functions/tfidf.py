@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..idioms import ensure_parallelism
 from .dedup import norm_tokens as _tokens
 
 
@@ -52,9 +53,7 @@ def term_counts(df: DataFrame, id_col: str = "doc_id",
     r7: few-split inputs are spread first (interpreted tokenize — the
     engine-wide NOTES pitfall #4; measured 3.4 s -> 1.6 s at sf1.0 for
     top_keywords on a 2-split input; pass-through on real corpora)."""
-    from ..plans.json_validator import _ensure_parallelism
-
-    src = _ensure_parallelism(df.select(id_col, text_col))
+    src = ensure_parallelism(df.select(id_col, text_col))
     return (
         src.select(F.col(id_col), F.explode(_tokens(F.col(text_col))).alias("token"))
         .groupBy(id_col, "token")

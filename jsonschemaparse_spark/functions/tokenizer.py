@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..idioms import ensure_parallelism
 from .dedup import norm_tokens
 from .text import word_counts
 
@@ -235,12 +236,10 @@ def bpe_encode(
     in tests/test_tokenizer.py)."""
     import pandas as pd
 
-    from ..plans.json_validator import _ensure_parallelism
-
     # r7: spread few-split inputs so the encode UDF batches use every
     # core (measured 2.8 s -> 1.7 s at sf1.0 on a 2-split input;
     # pass-through on real multi-split corpora)
-    df = _ensure_parallelism(df)
+    df = ensure_parallelism(df)
     sc = df.sparkSession.sparkContext
     cached = getattr(model, "_bc_cache", None)
     if cached is not None and cached[0] == sc.applicationId:

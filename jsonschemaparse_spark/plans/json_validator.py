@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..idioms import ensure_parallelism
 from ..schema.compiler import CompiledSchema, compile_rules
 from ..schema.evaluate import Evaluator
 from ..schema.strict_json import loads_strict
@@ -54,17 +55,6 @@ def _out_schema(df: DataFrame, key_cols: Sequence[str],
 
 def _records(errors) -> list[dict]:
     return [e.as_row() for e in errors]
-
-
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Repartition only when the plan has fewer partitions than cores —
-    real multi-split inputs pass through shuffle-free."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        current = df.rdd.getNumPartitions()
-    except Exception:  # noqa: BLE001
-        return df
-    return df.repartition(target) if current < max(target // 2, 2) else df
 
 
 def _is_unconstrained(cs: CompiledSchema) -> bool:
@@ -274,7 +264,7 @@ def validate_json_column(
     narrowed = df.select(*key_cols, json_col)
     # Arrow kernels are CPU-bound per batch: if the input has fewer splits
     # than cores (single parquet file), spread it so every core validates
-    narrowed = _ensure_parallelism(narrowed)
+    narrowed = ensure_parallelism(narrowed)
     evaluator = Evaluator(extensions=extensions)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -478,7 +468,7 @@ def validate_json_hybrid(
     # would each RE-PARSE the document (measured 4-7x slowdown on a
     # 30-field schema). CollapseProject cannot cross Generate, and
     # explode(array(e)) is a 1:1 row mapping.
-    narrowed = _ensure_parallelism(df.select(*key_cols, json_col))
+    narrowed = ensure_parallelism(df.select(*key_cols, json_col))
     mat = narrowed.select(
         *key_cols,
         F.col(json_col),
@@ -648,7 +638,7 @@ def validate_json_typed(
     # r7: JsonToStructs is CodegenFallback (interpreted), so a few-split
     # input serializes the parse onto the split count — spread it like
     # the Arrow path does (pass-through on multi-split inputs)
-    df = _ensure_parallelism(df)
+    df = ensure_parallelism(df)
     # PERMISSIVE from_json yields an all-null struct for corrupt input; the
     # corrupt-record side channel makes malformed docs detectable without
     # FAILFAST (never fail the job — parseInfo contract)

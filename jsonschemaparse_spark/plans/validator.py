@@ -304,7 +304,7 @@ def validate_dataframe(
         key_cols = [df.columns[0]]
     key_cols = list(key_cols)
 
-    # r7 note: deliberately NO _ensure_parallelism here — the validation
+    # r7 note: deliberately NO ensure_parallelism here — the validation
     # projection is whole-stage codegen (not interpreted), so the
     # spreading shuffle costs more than it saves on small inputs
     # (paired A/B at sf0.1: 0.64 s with vs 0.49 s without; at sf1.0 the

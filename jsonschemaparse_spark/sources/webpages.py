@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..idioms import ensure_parallelism
+
 SEED = 42
 N_HOSTS = 1000
 LANGS = ["en", "de", "fr", "es", "zh", "ja", "ru", "pt", "it", "nl"]
@@ -157,9 +159,7 @@ def extract_text(df: DataFrame, html_col: str = "html", out_col: str = "extracte
             out[out_col] = pdf[html_col].map(_extract_one)
             yield out
 
-    from ..plans.json_validator import _ensure_parallelism
-
-    return _ensure_parallelism(df).mapInPandas(run, schema=schema)
+    return ensure_parallelism(df).mapInPandas(run, schema=schema)
 
 
 def charset_violations(extracted: DataFrame, key_col: str = "url",

@@ -1,42 +1,113 @@
-"""Generate PLANS.md: formatted physical plans for the headline pipelines
-with scale commentary. Run after plan-affecting changes."""
+"""Dump formatted physical plans, in one of two modes.
+
+  python scripts/dump_plans.py
+      Regenerate PLANS.md: the headline pipelines' plans with scale
+      commentary. Run after plan-affecting changes.
+
+  python scripts/dump_plans.py --tag TAG [--tree DIR] [--out DIR]
+                               [QUERY ...]
+      Write explain('formatted') of the named __spark_entry__.queries()
+      entries (default: all of them) at SF, imported from the tree DIR
+      (default: this repo), to OUT/<query>_<TAG>.txt (default OUT:
+      this repo's plans/). Dump two trees under two tags and diff the
+      files to show a change leaves plans alone. Mask what differs
+      between processes: expression ids (#n), plan-node counters
+      (plan_id=n), Observation UUIDs and the working directory. Run
+      with PYTHONHASHSEED=0, so IN-lists built from Python sets print in
+      one order, and dump one tree at a time: webpages_flagship writes a
+      fixed temp path.
+"""
 
 from __future__ import annotations
 
+import argparse
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
-sys.path.insert(0, str(REPO))
 
 SF = "/root/testdata/sf0.01"
 
 
-def plan_of(df) -> str:
+def plan_text(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    text = buf.getvalue()
+    return buf.getvalue()
+
+
+def plan_of(df) -> str:
     # keep the operator tree + the first detail blocks; truncate huge exprs
     lines = []
-    for line in text.splitlines():
+    for line in plan_text(df).splitlines():
         lines.append(line if len(line) < 400 else line[:400] + " …")
     return "\n".join(lines[:70])
 
 
-def main() -> None:
+def session():
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def dump_queries(tag: str, tree: Path, out_dir: Path,
+                 names: list[str]) -> None:
+    sys.path.insert(0, str(tree))
+    # entries that run Python UDFs while building need the tree on the
+    # Spark Python workers' path too; they inherit this environment
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, [str(tree), os.environ.get("PYTHONPATH")]))
+    import __spark_entry__ as entry
+
+    out_dir.mkdir(parents=True, exist_ok=True)
+    spark = session()
+    qs = entry.queries()
+    for name in names or list(qs):
+        if name not in qs:
+            print(f"skip {name}: not in queries()")
+            continue
+        try:
+            text = plan_text(qs[name](spark, SF))
+        except Exception as e:  # noqa: BLE001
+            print(f"FAILED {name}: {type(e).__name__}: {e}")
+            continue
+        (out_dir / f"{name}_{tag}.txt").write_text(text)
+        print(f"wrote {name}_{tag}.txt")
+    spark.stop()
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description="Dump formatted physical plans.")
+    ap.add_argument("queries", nargs="*")
+    ap.add_argument("--tag", help="dump named queries() entries, not PLANS.md")
+    ap.add_argument("--tree", type=Path, default=REPO)
+    ap.add_argument("--out", type=Path, default=REPO / "plans")
+    args = ap.parse_args()
+    if args.tag:
+        dump_queries(args.tag, args.tree.resolve(), args.out, args.queries)
+        return
+    if args.queries:
+        ap.error("query names need --tag")
+    write_plans_md()
+
+
+def write_plans_md() -> None:
+    sys.path.insert(0, str(REPO))
+    from pyspark.sql import functions as F
+
+    spark = session()
 
     import __spark_entry__ as entry
     from jsonschemaparse_spark.functions.dedup import minhash_candidates

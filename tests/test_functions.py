@@ -593,7 +593,7 @@ def test_quality_flags_single_projection_plan(spark, documents):
     well-split input is ONE Project subtree over ONE scan — no
     Exchange, no Generate, no Python eval, and exactly one Project
     node in the physical plan. (r7: few-split inputs are spread by
-    _ensure_parallelism first — pinned separately below — so the
+    ensure_parallelism first — pinned separately below — so the
     zero-shuffle contract is asserted on an input that already has
     enough splits, via an eager localCheckpoint that truncates the
     spreading repartition out of the plan.)"""
@@ -1346,11 +1346,17 @@ def test_c4_badwords_hook(spark):
     assert "has_bad_word" not in c4_quality_flags(df).columns
 
 
-def test_fast_minhash_short_docs(spark):
+@pytest.mark.parametrize("hash_mode", ["fast", "portable"])
+def test_fast_minhash_short_docs(spark, hash_mode):
+    """minhash_signatures_agg (explode + MIN aggregate) against the
+    per-row minhash_signature expression — the reference the declared
+    query minhash_signatures uses — including sub-k-word and NULL
+    texts, in both hash modes."""
     from jsonschemaparse_spark.functions.dedup import (
+        MINHASH_P,
         minhash_near_duplicates,
+        minhash_signature,
         minhash_signatures_agg,
-        minhash_signatures_hof,
     )
 
     df = spark.createDataFrame(
@@ -1360,12 +1366,23 @@ def test_fast_minhash_short_docs(spark):
         "doc_id long, text string",
     )
     a = sorted(tuple(r) for r in
-               minhash_signatures_agg(df, "doc_id", hash_mode="fast").collect())
-    h = sorted(tuple(r) for r in
-               minhash_signatures_hof(df, "doc_id", hash_mode="fast").collect())
-    assert a == h and len(a) == 6
+               minhash_signatures_agg(df, "doc_id", hash_mode=hash_mode).collect())
+    h = sorted(tuple(r) for r in df.select(
+        "doc_id", minhash_signature(F.col("text"), hash_mode=hash_mode)).collect())
+    assert len(a) == len(h) == 6
+    if hash_mode == "portable":
+        # known divergence on NULL text, portable mode only: the agg
+        # path's MIN over the doc's one NULL shingle hash gives NULL
+        # lanes, while the per-row fold (least() skips NULL) keeps the
+        # P sentinel. Pinned as it stands; neither path follows the
+        # keying convention (NULL text like '') yet. ROADMAP open item
+        # 'MinHash NULL text': the change that fixes it updates this
+        # assertion.
+        assert a[5] == (6, [None] * 8) and h[5] == (6, [MINHASH_P] * 8)
+        a, h = a[:5], h[:5]
+    assert a == h
     pairs = minhash_near_duplicates(
-        df, "doc_id", threshold=0.8, hash_mode="fast"
+        df, "doc_id", threshold=0.8, hash_mode=hash_mode
     ).collect()
     assert [(p["id_a"], p["id_b"]) for p in pairs] == [(4, 5)]
     # identical short texts still collide (whole-text fallback hash)
@@ -1373,7 +1390,7 @@ def test_fast_minhash_short_docs(spark):
         [(1, "tiny doc"), (2, "tiny doc")], "doc_id long, text string"
     )
     sigs = {r["doc"]: r["_sig"] for r in
-            minhash_signatures_agg(df2, "doc_id", hash_mode="fast").collect()}
+            minhash_signatures_agg(df2, "doc_id", hash_mode=hash_mode).collect()}
     assert sigs[1] == sigs[2]
 
 

@@ -94,7 +94,7 @@ def test_duckdb_differential(spark):
 def test_single_projection_plan(spark, documents):
     """The whole scrub (4 counts + has_pii + redaction) is one Project
     over one scan — no Exchange, no Generate, no Python eval. (r7:
-    few-split inputs are spread by _ensure_parallelism first; the
+    few-split inputs are spread by ensure_parallelism first; the
     zero-shuffle pin is asserted on a well-split input via an eager
     localCheckpoint that truncates the spreading repartition.)"""
     wide = documents.repartition(

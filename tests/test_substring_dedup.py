@@ -143,9 +143,13 @@ def test_plan_window_scan_runs_exactly_once(spark):
     plan = q._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     assert "ReusedExchange" in final, final
-    # and no SECOND live window-generator subtree may appear (<= rather
-    # than == because plan-string truncation can hide the subtree
-    # entirely in some configs; two visible generators always fail)
+    # and no SECOND live window-generator subtree may appear; when the
+    # plan string is whole, exactly one must (a cut at
+    # spark.sql.maxPlanStringLength can hide the subtree entirely, so
+    # only then may zero be visible)
     wingen = sum(1 for line in final.splitlines()
                  if "posexplode(element_at(transform" in line)
     assert wingen <= 1, final
+    truncated = "more characters" in plan or "Truncated plan of" in plan
+    if not truncated:
+        assert wingen >= 1, final

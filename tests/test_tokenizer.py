@@ -119,7 +119,7 @@ def test_merges_df_round_trip(spark, documents):
 
 
 def test_encode_plan_zero_shuffle_one_arrow(spark, documents):
-    # r7: encode spreads FEW-split inputs first (_ensure_parallelism);
+    # r7: encode spreads FEW-split inputs first (ensure_parallelism);
     # the zero-shuffle pin holds on a well-split input, asserted via an
     # eager localCheckpoint that truncates the test's own spreading
     # repartition out of the plan
