@@ -15,14 +15,31 @@ snapshot_id is a caller-supplied label (e.g. the input dir's mtime hash).
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from .validator import VALID_COL, VIOLATIONS_COL, validate_dataframe
+from .kernels import VIOLATION_STRUCT
+from .validator import (
+    ValidationResult,
+    _compiled,
+    key_columns,
+    validate_dataframe,
+    verdict_rollup,
+)
 
 _FILE_COL = "_jsp_file"
+# per-file metric rows, in the column ORDER each runner writes them, so
+# a fresh-state empty frame never reorders vs an existing-state read
+# (r5 review #8)
+_ROW_METRICS = ("file string, n_rows long, n_failed_rows long, "
+                "n_violations long, pass boolean, snapshot_id string")
+_JSON_METRICS = ("snapshot_id string, file string, n_rows long, "
+                 "n_failed_rows long, n_violations long, pass boolean, "
+                 "clean_typed_ok boolean")
 
 
 @dataclass
@@ -41,6 +58,15 @@ def _violations_path(state_dir: str) -> str:
     return os.path.join(state_dir, "violations")
 
 
+def _input_files(spark, input_path: str) -> tuple[DataFrame, list[str]]:
+    """The input frame and its distinct files, the resumable units."""
+    df = spark.read.parquet(input_path)
+    files = [
+        r["f"] for r in df.select(F.input_file_name().alias("f")).distinct().collect()
+    ]
+    return df, files
+
+
 def _read_verdicts(spark, metrics_path: str, snapshot_id: str,
                    schema: str) -> DataFrame:
     """This snapshot's per-file metric rows — or an empty frame with the
@@ -52,6 +78,59 @@ def _read_verdicts(spark, metrics_path: str, snapshot_id: str,
             F.col("snapshot_id") == snapshot_id
         )
     return spark.createDataFrame([], schema)
+
+
+def _prior_metrics(spark, metrics_path: str, snapshot_id: str, schema: str) -> list:
+    """_read_verdicts, collected. A fresh state dir returns [] without
+    collecting the empty frame, which would cost a Spark job."""
+    if not os.path.exists(metrics_path):
+        return []
+    return _read_verdicts(spark, metrics_path, snapshot_id, schema).collect()
+
+
+def _per_file(res: ValidationResult, *extra) -> DataFrame:
+    """One verdict row per input file (plus any `extra` aggregates)."""
+    return verdict_rollup(
+        res.annotated.groupBy(F.col(_FILE_COL).alias("file")), res._n_viols(), *extra
+    )
+
+
+def _empty_violations(spark, df: DataFrame, keys: list[str]) -> DataFrame:
+    """A run with nothing fresh returns an EMPTY frame with the real
+    violations schema (key cols + 6 report fields), so downstream
+    appends/unions don't produce a schema-mismatched parquet dir."""
+    schema = StructType([df.schema[k] for k in keys] + VIOLATION_STRUCT.fields)
+    return spark.createDataFrame([], schema)
+
+
+def _swap_write(frame: DataFrame, path: str) -> None:
+    """Replace the parquet store at `path` with `frame`. The frame may
+    READ `path`, so an in-place overwrite would delete its own source
+    mid-computation (cache eviction / lost-executor replay recomputes
+    from the deleted files). Stage to `<path>.__jsp_stage`, then swap in
+    compact_parquet's order: live aside to `<path>.__jsp_old`, stage in,
+    drop the old copy. A kill at any step leaves a complete store at
+    `path` or at `<path>.__jsp_old`, and _restore_swap settles it at the
+    start of the next run. No row-count check or concurrent-append
+    rollback as in compact_parquet: the runner is the store's only
+    writer."""
+    stage, old = f"{path}.__jsp_stage", f"{path}.__jsp_old"
+    frame.write.mode("overwrite").parquet(stage)
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(stage, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _restore_swap(path: str) -> None:
+    """Settle a _swap_write that a killed run left behind."""
+    old = f"{path}.__jsp_old"
+    if not os.path.exists(old):
+        return
+    if os.path.exists(path):
+        shutil.rmtree(old)  # killed while dropping the old copy
+    else:
+        os.rename(old, path)  # killed between the two renames
 
 
 def run_with_checkpoint(
@@ -68,67 +147,32 @@ def run_with_checkpoint(
     n_violations, pass). Files already recorded for this snapshot_id are
     pruned from the scan (file-list pushdown: the skipped files are never
     opened — check the plan's file listing)."""
-    df = spark.read.parquet(input_path)
-    all_files = [
-        r["f"] for r in df.select(F.input_file_name().alias("f")).distinct().collect()
-    ]
-
-    done: set[str] = set()
+    df, all_files = _input_files(spark, input_path)
+    keys = key_columns(df, key_cols or None)
     metrics_path = _metrics_path(state_dir)
-    have_state = os.path.exists(metrics_path)
-    if have_state:
-        prior = spark.read.parquet(metrics_path).filter(F.col("snapshot_id") == snapshot_id)
-        done = {r["file"] for r in prior.select("file").distinct().collect()}
-
+    prior_rows = _prior_metrics(spark, metrics_path, snapshot_id, _ROW_METRICS)
+    done = {r["file"] for r in prior_rows}
     todo = [f for f in all_files if f not in done]
 
     if todo:
-        fresh_df = spark.read.parquet(*todo)
         # Capture the file AT SCAN TIME: input_file_name() evaluated above a
         # later exchange (the Arrow fallback path repartitions) returns ''.
         # The _jsp_ prefix keeps the helper column OUT of the validated row
         # object (validate_dataframe excludes internal columns), and passing
         # it as a KEY column threads it through every engine path (Column,
         # per-column fallback, whole-row Arrow) to the annotated output.
-        keys = list(key_cols) if key_cols else [fresh_df.columns[0]]
         res = validate_dataframe(
-            fresh_df.withColumn(_FILE_COL, F.input_file_name()),
+            spark.read.parquet(*todo).withColumn(_FILE_COL, F.input_file_name()),
             rules, key_cols=keys + [_FILE_COL],
         )
-        fresh_metrics = (
-            res.annotated.groupBy(F.col(_FILE_COL).alias("file"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.when(F.col(VALID_COL), 0).otherwise(1)).alias("n_failed_rows"),
-                F.sum(res._n_viols()).alias("n_violations"),
-            )
-            .withColumn("pass", F.col("n_failed_rows") == 0)
-            .withColumn("snapshot_id", F.lit(snapshot_id))
-        )
-        fresh_metrics.write.mode("append").parquet(metrics_path)
+        _per_file(res).withColumn("snapshot_id", F.lit(snapshot_id)) \
+            .write.mode("append").parquet(metrics_path)
         violations = res.violations().drop(_FILE_COL)
         violations.write.mode("append").parquet(_violations_path(state_dir))
     else:
-        # Nothing fresh: return an EMPTY frame with the real violations
-        # schema (key cols + 6 report fields) so downstream appends/unions
-        # don't produce a schema-mismatched parquet dir.
-        keys = list(key_cols) if key_cols else [df.columns[0]]
-        from pyspark.sql.types import StructType
-        fields = [df.schema[k] for k in keys]
-        schema = StructType(fields).add("constraint_id", "string") \
-            .add("path", "string").add("keyword", "string") \
-            .add("expected", "string").add("actual", "string") \
-            .add("message", "string")
-        violations = spark.createDataFrame([], schema)
+        violations = _empty_violations(spark, df, keys)
 
-    verdicts = _read_verdicts(
-        spark, metrics_path, snapshot_id,
-        # column ORDER matches the written parquet layout (groupBy cols,
-        # aggs, then the two withColumns — r5 review #8: a fresh-state
-        # empty frame must not reorder vs an existing-state read)
-        "file string, n_rows long, n_failed_rows long, n_violations long, "
-        "pass boolean, snapshot_id string",
-    )
+    verdicts = _read_verdicts(spark, metrics_path, snapshot_id, _ROW_METRICS)
     return CheckpointedRun(
         verdicts=verdicts,
         violations=violations,
@@ -177,27 +221,21 @@ def run_json_with_checkpoint(
     - metrics:    (snapshot_id, file, n_rows, n_failed_rows, n_violations,
                    pass, clean_typed_ok)
     - violations: report rows + (snapshot_id, file)
-    Reprocess rewrites replace this snapshot's rows via write-to-temp-
-    then-swap — never an in-lineage overwrite of the parquet being read
-    (r4 review finding #4: the self-overwrite hazard). Lineage/skip
+    Reprocess rewrites replace this snapshot's rows via stage-then-swap
+    (_swap_write) — never an in-lineage overwrite of the parquet being
+    read (r4 review finding #4: the self-overwrite hazard); a run first
+    settles any swap a killed run left behind. Lineage/skip
     semantics match run_with_checkpoint (file-granular, pruned scans)."""
     from .json_validator import validate_json_column
 
     FLAG = "_jsp_rescue_flag"
-    df = spark.read.parquet(input_path)
-    all_files = [
-        r["f"] for r in df.select(F.input_file_name().alias("f")).distinct().collect()
-    ]
-
+    df, all_files = _input_files(spark, input_path)
+    keys = key_columns(df, key_cols or None)
     metrics_path = _metrics_path(state_dir)
     violations_path = _violations_path(state_dir)
-    prior_rows = []
-    if os.path.exists(metrics_path):
-        prior_rows = (
-            spark.read.parquet(metrics_path)
-            .filter(F.col("snapshot_id") == snapshot_id)
-            .collect()
-        )
+    _restore_swap(metrics_path)
+    _restore_swap(violations_path)
+    prior_rows = _prior_metrics(spark, metrics_path, snapshot_id, _JSON_METRICS)
     done = {r["file"] for r in prior_rows}
     clean_ok = {r["file"] for r in prior_rows if r["clean_typed_ok"]}
 
@@ -210,7 +248,6 @@ def run_json_with_checkpoint(
         auto_files = [f for f in all_files if f not in done]
         skipped = len(all_files) - len(auto_files)
 
-    keys = list(key_cols) if key_cols else [df.columns[0]]
     all_violations = []
     fresh_metrics_rows = []
     n_typed = 0
@@ -221,10 +258,9 @@ def run_json_with_checkpoint(
             # revalidate on the EXACT struct the hybrid routed through, so
             # the identical-results guarantee is schema-for-schema, not
             # merely equivalent-by-inference
-            from ..schema.compiler import compile_rules
             from .json_validator import _typed_route_schema, validate_json_typed
 
-            cs = rules if not isinstance(rules, dict) else compile_rules(rules)
+            cs = _compiled(rules)
             res = validate_json_typed(
                 part, json_col, cs, _typed_route_schema(cs),
                 key_cols=keys + [_FILE_COL], extensions=False,
@@ -235,17 +271,9 @@ def run_json_with_checkpoint(
                 part, json_col, rules, key_cols=keys + [_FILE_COL],
                 engine=engine, keep_flag_col=FLAG,
             )
-        per_file = (
-            res.annotated.groupBy(F.col(_FILE_COL).alias("file"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.when(F.col(VALID_COL), 0).otherwise(1)).alias("n_failed_rows"),
-                F.sum(res._n_viols()).alias("n_violations"),
-                F.sum(F.col(FLAG).cast("long")).alias("n_flagged"),
-            )
-            .withColumn("pass", F.col("n_failed_rows") == 0)
-            .collect()  # one tiny row per file
-        )
+        per_file = _per_file(
+            res, F.sum(F.col(FLAG).cast("long")).alias("n_flagged")
+        ).collect()  # one tiny row per file
         for r in per_file:
             fresh_metrics_rows.append(
                 (snapshot_id, r["file"], r["n_rows"], r["n_failed_rows"],
@@ -265,26 +293,8 @@ def run_json_with_checkpoint(
         n_typed = len(typed_files)
 
     # persist fresh state; reprocess REPLACES this snapshot's rows
-    def _swap_write(frame: DataFrame, path: str) -> None:
-        """Materialize to a sibling temp dir, then swap directories — the
-        frame may READ `path`, so an in-place overwrite would delete its
-        own source mid-computation (cache eviction / lost-executor replay
-        recomputes from the deleted files)."""
-        import shutil
-        import uuid
-
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        frame.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
-
     if fresh_metrics_rows:
-        fresh = spark.createDataFrame(
-            fresh_metrics_rows,
-            "snapshot_id string, file string, n_rows long, n_failed_rows long, "
-            "n_violations long, pass boolean, clean_typed_ok boolean",
-        )
+        fresh = spark.createDataFrame(fresh_metrics_rows, _JSON_METRICS)
         if reprocess and os.path.exists(metrics_path):
             keep = spark.read.parquet(metrics_path).filter(
                 F.col("snapshot_id") != snapshot_id
@@ -309,19 +319,9 @@ def run_json_with_checkpoint(
             fresh_viols.write.mode("append").parquet(violations_path)
         violations = fresh_viols.drop("snapshot_id", "file")
     else:
-        from pyspark.sql.types import StructType
+        violations = _empty_violations(spark, df, keys)
 
-        schema = StructType([df.schema[k] for k in keys]) \
-            .add("constraint_id", "string").add("path", "string") \
-            .add("keyword", "string").add("expected", "string") \
-            .add("actual", "string").add("message", "string")
-        violations = spark.createDataFrame([], schema)
-
-    verdicts = _read_verdicts(
-        spark, metrics_path, snapshot_id,
-        "snapshot_id string, file string, n_rows long, n_failed_rows long, "
-        "n_violations long, pass boolean, clean_typed_ok boolean",
-    )
+    verdicts = _read_verdicts(spark, metrics_path, snapshot_id, _JSON_METRICS)
     engine_used = (
         "mixed" if (auto_files and typed_files)
         else "typed" if typed_files else "auto" if auto_files else "none"

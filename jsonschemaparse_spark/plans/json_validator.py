@@ -16,21 +16,33 @@ syntax errors.
 
 from __future__ import annotations
 
-import json
+from functools import partial
 from typing import Iterator, Optional, Sequence
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..api import _position_map, _positioned_syntax_error
 from ..idioms import ensure_parallelism
-from ..schema.compiler import CompiledSchema, compile_rules
-from ..schema.evaluate import Evaluator
+from ..schema.compiler import CompiledSchema
+from ..schema.evaluate import Evaluator, check_limits
+from ..schema.relaxed_json import BigNumberError, loads_relaxed
 from ..schema.strict_json import loads_strict
-from .kernels import COMPACT_ARRAY, VIOLATION_ARRAY
-from .validator import PY_VIOLS_COL, VALID_COL, VIOLATIONS_COL, ValidationResult
+from .kernels import COMPACT_ARRAY, VIOLATION_ARRAY, ColumnCompiler, ExpressionFallback
+from .validator import (
+    PY_VIOLS_COL,
+    VALID_COL,
+    VIOLATIONS_COL,
+    ValidationResult,
+    _compiled,
+    data_columns,
+    document_record,
+    key_columns,
+)
 
 
 # positioned full-report shape (r5): the 6 report fields + the reference's
@@ -55,6 +67,62 @@ def _out_schema(df: DataFrame, key_cols: Sequence[str],
 
 def _records(errors) -> list[dict]:
     return [e.as_row() for e in errors]
+
+
+def _check_document(doc, cs: CompiledSchema, evaluator: Evaluator, parse,
+                    limits=None, positions: bool = False):
+    """(valid, report records) for one JSON document, the per-document step
+    of both Python paths. A NULL document is vacuously valid. A document
+    that does not parse yields one syntax or bigNumber record; otherwise
+    the evaluator's errors, plus the resource-limit rows when `limits` is
+    set. `positions` adds (line, column) to every record: a syntax record
+    carries the positioned SyntaxError itself, message included, and the
+    anchor-map re-parse runs ONLY for documents with errors (the
+    O(flagged) trickle; clean documents pay nothing extra)."""
+    if doc is None:
+        return True, []
+    try:
+        value = parse(doc)
+    except BigNumberError as e:
+        # positions rejects the relaxed parsers, so `at` only keeps a
+        # positioned record schema-complete
+        return False, [document_record(cs.id, "bigNumber", str(e),
+                                       at={} if positions else None)]
+    except (ValueError, TypeError) as e:
+        if not positions:
+            return False, [document_record(cs.id, "syntax", f"Syntax error: {e}")]
+        # re-parse for the reference-position syntax error; the REAL
+        # scanner error keeps parser-disagreement docs descriptive
+        err = _positioned_syntax_error(doc, e)
+        return False, [document_record(cs.id, "syntax", str(err),
+                                       at=getattr(err, "position", None) or {})]
+    errors, _ = evaluator.validate(cs, value)
+    if limits is not None:
+        errors = errors + check_limits(value, limits)
+    if not (positions and errors):
+        return not errors, _records(errors)
+    try:
+        pos = _position_map(doc)
+    except ValueError:
+        pos = {}
+    recs = []
+    for e in errors:
+        at = pos.get(e.path) or {}
+        recs.append({**e.as_row(), "line": at.get("line"), "column": at.get("column")})
+    return False, recs
+
+
+def _permissive_parse(json_col: str, struct: T.StructType) -> Column:
+    """PERMISSIVE from_json of `json_col` into `struct`, plus the
+    `_jsp_corrupt` side channel: a malformed document is detectable
+    without FAILFAST (never fail the job — parseInfo contract)."""
+    parse_schema = T.StructType(
+        list(struct.fields) + [T.StructField("_jsp_corrupt", T.StringType(), True)]
+    )
+    return F.from_json(
+        F.col(json_col), parse_schema,
+        {"columnNameOfCorruptRecord": "_jsp_corrupt"},
+    )
 
 
 def _is_unconstrained(cs: CompiledSchema) -> bool:
@@ -217,9 +285,6 @@ def validate_json_column(
     hybrid = the actual needs_py flag; typed = always False (no Python
     stage exists); arrow = always True (every row goes through Python).
     """
-    from ..schema.evaluate import check_limits
-    from ..schema.relaxed_json import BigNumberError, loads_relaxed
-
     if engine not in ("auto", "arrow", "typed"):
         raise ValueError(
             f"engine must be one of 'auto', 'arrow', 'typed'; got {engine!r}"
@@ -235,7 +300,7 @@ def validate_json_column(
                 "positions=True is only supported for strict JSON "
                 "(no syntax/big_number/interoperable options)")
 
-    cs = rules if isinstance(rules, CompiledSchema) else compile_rules(rules)
+    cs = _compiled(rules)
 
     def _with_flag(res: ValidationResult, flag_value: bool) -> ValidationResult:
         if keep_flag_col is not None:
@@ -249,119 +314,36 @@ def validate_json_column(
     if engine == "auto" and not relaxed and limits is None and not positions:
         route = _typed_route_schema(cs)
         if isinstance(route, T.StructType):
-            from .kernels import ExpressionFallback
-
             try:
                 return validate_json_hybrid(df, json_col, cs, route,
                                             key_cols=key_cols, extensions=extensions,
                                             keep_flag_col=keep_flag_col)
             except ExpressionFallback:
                 pass  # constructs the Column compiler can't express: Arrow path
-    if key_cols is None:
-        key_cols = [df.columns[0]]
-    key_cols = list(key_cols)
+    key_cols = key_columns(df, key_cols)
     out_schema = _out_schema(df, key_cols, positioned=positions)
     narrowed = df.select(*key_cols, json_col)
     # Arrow kernels are CPU-bound per batch: if the input has fewer splits
     # than cores (single parquet file), spread it so every core validates
     narrowed = ensure_parallelism(narrowed)
     evaluator = Evaluator(extensions=extensions)
+    parse = (
+        partial(loads_relaxed, syntax=syntax, big_number=big_number,
+                interoperable=interoperable)
+        if relaxed else loads_strict
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # cs/evaluator arrive via the pickled task closure — one deserialize
         # per task, shared across all its Arrow batches.
-        if positions:
-            from ..api import _position_map, _positioned_syntax_error
         for pdf in batches:
-            valids: list[bool] = []
-            viols: list[list[dict]] = []
-            for doc in pdf[json_col]:
-                if doc is None:
-                    valids.append(True)
-                    viols.append([])
-                    continue
-                try:
-                    if relaxed:
-                        value = loads_relaxed(
-                            doc, syntax=syntax, big_number=big_number,
-                            interoperable=interoperable,
-                        )
-                    else:
-                        value = loads_strict(doc)
-                except BigNumberError as e:
-                    valids.append(False)
-                    rec = {
-                        "constraint_id": cs.id,
-                        "path": "",
-                        "keyword": "bigNumber",
-                        "expected": None,
-                        "actual": None,
-                        "message": str(e),
-                    }
-                    if positions:  # unreachable today (relaxed is rejected
-                        # above) but keeps the record schema-complete
-                        rec.update(line=None, column=None)
-                    viols.append([rec])
-                    continue
-                except (ValueError, TypeError) as e:
-                    valids.append(False)
-                    if positions:
-                        # re-parse for the reference-position syntax error;
-                        # the REAL scanner error keeps parser-disagreement
-                        # docs descriptive (same contract as the old
-                        # validate_json_positions body)
-                        err = _positioned_syntax_error(doc, e)
-                        p = getattr(err, "position", None) or {}
-                        viols.append(
-                            [
-                                {
-                                    "constraint_id": cs.id,
-                                    "path": "",
-                                    "keyword": "syntax",
-                                    "expected": None,
-                                    "actual": None,
-                                    "message": str(err),
-                                    "line": p.get("line"),
-                                    "column": p.get("column"),
-                                }
-                            ]
-                        )
-                    else:
-                        viols.append(
-                            [
-                                {
-                                    "constraint_id": cs.id,
-                                    "path": "",
-                                    "keyword": "syntax",
-                                    "expected": None,
-                                    "actual": None,
-                                    "message": f"Syntax error: {e}",
-                                }
-                            ]
-                        )
-                    continue
-                errors, _ = evaluator.validate(cs, value)
-                if limits is not None:
-                    errors = errors + check_limits(value, limits)
-                valids.append(not errors)
-                if positions and errors:
-                    # anchor-map re-parse ONLY for violating docs: the
-                    # O(flagged) trickle, clean docs pay nothing extra
-                    try:
-                        pos = _position_map(doc)
-                    except ValueError:
-                        pos = {}
-                    recs = []
-                    for e in errors:
-                        at = pos.get(e.path) or {}
-                        recs.append({**e.as_row(), "line": at.get("line"),
-                                     "column": at.get("column")})
-                    viols.append(recs)
-                else:
-                    viols.append(_records(errors))
+            checked = [
+                _check_document(doc, cs, evaluator, parse, limits, positions)
+                for doc in pdf[json_col]
+            ]
             out = pdf[key_cols].copy()
-            out[VALID_COL] = valids
-            out[VIOLATIONS_COL] = viols
+            out[VALID_COL] = [valid for valid, _ in checked]
+            out[VIOLATIONS_COL] = [recs for _, recs in checked]
             yield out
 
     annotated = narrowed.mapInPandas(run, schema=out_schema)
@@ -372,48 +354,23 @@ def _flagged_docs_udf(cs: CompiledSchema, extensions: bool):
     """Arrow-batched pandas UDF re-evaluating only the NON-NULL docs it
     receives (the hybrid path nulls out clean rows, so Arrow ships a
     column of mostly-nulls and Python cost is O(flagged rows)).
-    Returns struct<valid boolean, v array<full violation>>."""
-    from pyspark.sql import types as T
-
-    from .kernels import VIOLATION_ARRAY
-
+    Returns struct<valid boolean, v array<full violation>>: the strict
+    case of validate_json_column's per-document check (no limits, no
+    positions)."""
     out_type = T.StructType([
         T.StructField("valid", T.BooleanType(), False),
         T.StructField("v", VIOLATION_ARRAY, False),
     ])
-    sid = cs.id
 
     @F.pandas_udf(out_type)
     def check(docs: pd.Series) -> pd.DataFrame:
-        from ..schema.strict_json import loads_strict as _loads
-
         ev = Evaluator(extensions=extensions)
-        import numpy as np
-
         n = len(docs)
         valids = [True] * n
         viols: list[list[dict]] = [[]] * n  # slots replaced, never mutated
         arr = docs.to_numpy()
         for i in np.flatnonzero(docs.notna().to_numpy()):
-            doc = arr[i]
-            try:
-                value = _loads(doc)
-            except (ValueError, TypeError) as e:
-                valids[i] = False
-                viols[i] = [
-                    {
-                        "constraint_id": sid,
-                        "path": "",
-                        "keyword": "syntax",
-                        "expected": None,
-                        "actual": None,
-                        "message": f"Syntax error: {e}",
-                    }
-                ]
-                continue
-            errors, _ = ev.validate(cs, value)
-            valids[i] = not errors
-            viols[i] = _records(errors)
+            valids[i], viols[i] = _check_document(arr[i], cs, ev, loads_strict)
         return pd.DataFrame({"valid": valids, "v": viols})
 
     return check
@@ -448,20 +405,9 @@ def validate_json_hybrid(
     randomized hybrid-vs-arrow differential asserts full message parity
     (test_differential, multiplicity assertion un-relaxed).
     """
-    from .kernels import ColumnCompiler
-
-    if key_cols is None:
-        key_cols = [df.columns[0]]
-    key_cols = list(key_cols)
-    cs = rules if isinstance(rules, CompiledSchema) else compile_rules(rules)
-
-    parse_schema = T.StructType(
-        list(route_schema.fields) + [T.StructField("_jsp_corrupt", T.StringType(), True)]
-    )
-    parse_expr = F.from_json(
-        F.col(json_col), parse_schema,
-        {"columnNameOfCorruptRecord": "_jsp_corrupt"},
-    )
+    key_cols = key_columns(df, key_cols)
+    cs = _compiled(rules)
+    parse_expr = _permissive_parse(json_col, route_schema)
     # Materialize the parse ONCE per row behind a Generate barrier:
     # JsonToStructs is CodegenFallback and common-subexpression elimination
     # does not reliably dedupe it, so the dozens of field references below
@@ -565,9 +511,6 @@ def schema_for_rules(rules, default=T.StringType()) -> T.DataType:
     SURVEY.md §1.2 (integer->long, number->double, object->struct from
     `properties`, array->array of items). Unconstrained shapes fall back
     to `default` (string)."""
-    from ..schema.compiler import CompiledSchema
-    from .validator import _compiled
-
     cs: CompiledSchema = _compiled(rules)
 
     def infer(node: CompiledSchema, depth: int = 0) -> T.DataType:
@@ -624,13 +567,8 @@ def validate_json_typed(
     Use validate_json_column (Arrow/Python) only when the shape is dynamic.
     Corrupt JSON yields a NULL struct -> reported as a 'syntax' violation.
     """
-    from .kernels import COMPACT_ARRAY, ColumnCompiler
-    from .validator import _compiled
-
     cs = _compiled(rules)
-    if key_cols is None:
-        key_cols = [df.columns[0]]
-    key_cols = list(key_cols)
+    key_cols = key_columns(df, key_cols)
     if spark_schema is None:
         spark_schema = schema_for_rules(cs)  # inferred from the rules
     if isinstance(spark_schema, str):
@@ -639,16 +577,7 @@ def validate_json_typed(
     # input serializes the parse onto the split count — spread it like
     # the Arrow path does (pass-through on multi-split inputs)
     df = ensure_parallelism(df)
-    # PERMISSIVE from_json yields an all-null struct for corrupt input; the
-    # corrupt-record side channel makes malformed docs detectable without
-    # FAILFAST (never fail the job — parseInfo contract)
-    parse_schema = T.StructType(
-        list(spark_schema.fields) + [T.StructField("_jsp_corrupt", T.StringType(), True)]
-    )
-    parse_expr = F.from_json(
-        F.col(json_col), parse_schema,
-        {"columnNameOfCorruptRecord": "_jsp_corrupt"},
-    )
+    parse_expr = _permissive_parse(json_col, spark_schema)
     # single-eval barrier: JsonToStructs is CodegenFallback and CSE does not
     # reliably dedupe it across the per-field references (see
     # validate_json_hybrid); Generate materializes the parse once per row
@@ -694,11 +623,7 @@ def validate_json_rows(
     """Whole-row fallback: serialize each row to a JSON object (JVM-side
     to_json — cheap, columnar) and validate with the Python evaluator.
     Used when ColumnCompiler raises ExpressionFallback."""
-    if key_cols is None:
-        key_cols = [df.columns[0]]
-    key_cols = list(key_cols)
-    from .validator import data_columns
-
+    key_cols = key_columns(df, key_cols)
     data_cols = data_columns(df)
     with_doc = df.select(
         *key_cols, F.to_json(F.struct(*[F.col(c) for c in data_cols])).alias("_jsp_doc")

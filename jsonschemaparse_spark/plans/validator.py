@@ -19,7 +19,7 @@ from typing import Optional, Sequence
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -47,6 +47,42 @@ def data_columns(df: DataFrame) -> list[str]:
 
 def _compiled(rules) -> CompiledSchema:
     return rules if isinstance(rules, CompiledSchema) else compile_rules(rules)
+
+
+def key_columns(df: DataFrame, key_cols: Optional[Sequence[str]]) -> list[str]:
+    """The report's key columns: `key_cols`, or the frame's first column."""
+    return [df.columns[0]] if key_cols is None else list(key_cols)
+
+
+def document_record(constraint_id: str, keyword: str, message: str,
+                    path: str = "", at: Optional[dict] = None) -> dict:
+    """A violation raised while parsing a value, not by an evaluator check
+    (a syntax or bigNumber failure): the report's six fields, plus
+    line/column from `at` when the report is positioned."""
+    rec = {"constraint_id": constraint_id, "path": path, "keyword": keyword,
+           "expected": None, "actual": None, "message": message}
+    if at is not None:
+        rec.update(line=at.get("line"), column=at.get("column"))
+    return rec
+
+
+def verdict_counts(n_viols: Column) -> list[Column]:
+    """(n_rows, n_failed_rows, n_violations) over an annotated frame,
+    given the per-row violation count."""
+    return [
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(F.when(F.col(VALID_COL), 0).otherwise(1)).alias("n_failed_rows"),
+        F.sum(n_viols).alias("n_violations"),
+    ]
+
+
+def verdict_rollup(grouped: GroupedData, n_viols: Column, *extra: Column) -> DataFrame:
+    """One verdict row per group: the counts, any `extra` aggregates,
+    then pass = no failed row."""
+    return (
+        grouped.agg(*verdict_counts(n_viols), *extra)
+        .withColumn("pass", F.col("n_failed_rows") == 0)
+    )
 
 
 @dataclass
@@ -173,20 +209,12 @@ class ValidationResult:
     def verdicts(self) -> DataFrame:
         """Per-partition pass/fail (north rule). Partition-local agg: the
         grouping key is spark_partition_id, so AQE keeps this map-side."""
-        return (
-            self.annotated.select(
-                F.spark_partition_id().alias(PARTITION_COL),
-                F.col(VALID_COL),
-                self._n_viols().alias("_n_viol"),
-            )
-            .groupBy(PARTITION_COL)
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.when(F.col(VALID_COL), 0).otherwise(1)).alias("n_failed_rows"),
-                F.sum("_n_viol").alias("n_violations"),
-            )
-            .withColumn("pass", F.col("n_failed_rows") == 0)
+        per_row = self.annotated.select(
+            F.spark_partition_id().alias(PARTITION_COL),
+            F.col(VALID_COL),
+            self._n_viols().alias("_n_viol"),
         )
+        return verdict_rollup(per_row.groupBy(PARTITION_COL), F.col("_n_viol"))
 
     def observed(self, name: str = "jsp_metrics"):
         """Attach Spark observe() metrics so row/violation counts come back
@@ -196,20 +224,11 @@ class ValidationResult:
         from pyspark.sql import Observation
 
         obs = Observation(name)
-        df = self.annotated.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.when(F.col(VALID_COL), 0).otherwise(1)).alias("n_failed_rows"),
-            F.sum(self._n_viols()).alias("n_violations"),
-        )
+        df = self.annotated.observe(obs, *verdict_counts(self._n_viols()))
         return df, obs
 
     def summary(self) -> dict:
-        row = self.annotated.select(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.when(F.col(VALID_COL), 0).otherwise(1)).alias("n_failed_rows"),
-            F.sum(self._n_viols()).alias("n_violations"),
-        ).first()
+        row = self.annotated.select(*verdict_counts(self._n_viols())).first()
         return {
             "n_rows": row["n_rows"],
             "n_failed_rows": row["n_failed_rows"] or 0,
@@ -258,11 +277,8 @@ def _column_fallback_udf(sub, nm: str, extensions: bool, big_number: str = "defa
                     obj = _json.loads(doc)
             except BigNumberError as e:
                 valids.append(False)
-                viols.append([{
-                    "constraint_id": sub.id, "path": f"/{nm}",
-                    "keyword": "bigNumber", "expected": None,
-                    "actual": None, "message": str(e),
-                }])
+                viols.append([document_record(sub.id, "bigNumber", str(e),
+                                              path=f"/{nm}")])
                 continue
             if nm not in obj:  # NULL column => absent property => vacuous
                 valids.append(True)
@@ -299,10 +315,10 @@ def validate_dataframe(
     the compiler can't express at all fall back to the whole-row Arrow
     path. 'never' raises instead.
     """
+    if fallback not in ("auto", "never"):
+        raise ValueError(f"fallback must be 'auto' or 'never'; got {fallback!r}")
     cs = _compiled(rules)
-    if key_cols is None:
-        key_cols = [df.columns[0]]
-    key_cols = list(key_cols)
+    key_cols = key_columns(df, key_cols)
 
     # r7 note: deliberately NO ensure_parallelism here — the validation
     # projection is whole-stage codegen (not interpreted), so the

@@ -21,8 +21,12 @@ from typing import Callable, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.kernels import COMPACT_ARRAY, ColumnCompiler
-from ..plans.validator import VALID_COL, VIOLATIONS_COL, _compiled
+from ..plans.validator import (
+    VALID_COL,
+    VIOLATIONS_COL,
+    validate_dataframe,
+    verdict_rollup,
+)
 
 
 def validate_stream(
@@ -31,23 +35,14 @@ def validate_stream(
     extensions: bool = True,
 ) -> DataFrame:
     """Annotate a (possibly streaming) DataFrame with _jsp_valid and
-    _jsp_violations. Pure projection — fully streaming-compatible, no state."""
-    cs = _compiled(rules)
-    compiler = ColumnCompiler(extensions=extensions)
-    from pyspark.sql import types as T
-
-    from ..plans.validator import data_columns
-
-    data_cols = data_columns(stream_df)
-    data_schema = T.StructType([stream_df.schema[c] for c in data_cols])
-    row_struct = F.struct(*[F.col(c) for c in data_cols])
-    valid, viols = compiler.compile_value(cs, row_struct, data_schema, F.lit(""))
-    return stream_df.withColumns(
-        {
-            VALID_COL: F.coalesce(valid, F.lit(True)),
-            VIOLATIONS_COL: F.coalesce(viols, F.array().cast(COMPACT_ARRAY)),
-        }
-    )
+    _jsp_violations: the batch pass's `annotated` frame, one query
+    definition for batch and stream. Pure projection — fully
+    streaming-compatible, no state. fallback='never' keeps it so: rules
+    the Column compiler cannot express raise ExpressionFallback instead
+    of routing to the Python paths."""
+    return validate_dataframe(
+        stream_df, rules, extensions=extensions, fallback="never"
+    ).annotated
 
 
 def windowed_verdicts(
@@ -58,16 +53,10 @@ def windowed_verdicts(
 ) -> DataFrame:
     """Tumbling-window verdict rollup with late-data bound: (window,
     n_rows, n_failed_rows, n_violations, pass)."""
-    return (
-        annotated.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("window"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.when(F.col(VALID_COL), 0).otherwise(1)).alias("n_failed_rows"),
-            F.sum(F.size(VIOLATIONS_COL)).alias("n_violations"),
-        )
-        .withColumn("pass", F.col("n_failed_rows") == 0)
+    grouped = annotated.withWatermark(ts_col, watermark).groupBy(
+        F.window(F.col(ts_col), window).alias("window")
     )
+    return verdict_rollup(grouped, F.size(VIOLATIONS_COL))
 
 
 def streaming_dedup(

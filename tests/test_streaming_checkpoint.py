@@ -468,3 +468,107 @@ def test_checkpoint_verdicts_column_order_consistent(spark, tmp_path):
         state_dir=str(tmp_path / "st2"), key_cols=["id"])
     assert fresh.verdicts.columns == real.verdicts.columns
 
+
+
+# =========================================================================
+# what the checkpoint runners must keep: state column lists, Spark job
+# counts of a cold run, and a crash inside the reprocess swap
+# =========================================================================
+REPORT_COLS = ["constraint_id", "path", "keyword", "expected", "actual", "message"]
+ROW_RULES = {"properties": {"id": {"type": "integer", "maximum": 2000}}}
+
+
+def _three_files(spark, path):
+    """3 parquet files x 1000 rows of (id, doc)."""
+    spark.range(3000).select(
+        F.col("id"),
+        F.format_string('{"k": %d}', (F.col("id") % 70).cast("int")).alias("doc"),
+    ).repartition(3).write.parquet(path)
+
+
+def _jobs_of(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_checkpoint_state_columns_and_cold_run_jobs(spark, tmp_path):
+    from jsonschemaparse_spark.plans.checkpoint import (
+        run_json_with_checkpoint,
+        run_with_checkpoint,
+    )
+
+    data = str(tmp_path / "in")
+    _three_files(spark, data)
+    row_state, json_state = str(tmp_path / "row_state"), str(tmp_path / "json_state")
+
+    run, row_jobs = _jobs_of(spark, "ckpt-row-cold", lambda: run_with_checkpoint(
+        spark, data, ROW_RULES, row_state, key_cols=["id"]))
+    assert run.n_files_total == 3
+    jrun, json_jobs = _jobs_of(spark, "ckpt-json-cold", lambda: run_json_with_checkpoint(
+        spark, data, "doc", JSON_RULES, json_state, key_cols=["id"]))
+    assert jrun.n_files_total == 3
+    # the counts of this input at the seed (Spark 4.1.2, local[4], AQE on)
+    assert row_jobs <= 9 and json_jobs <= 10, (row_jobs, json_jobs)
+
+    def cols(path):
+        return spark.read.parquet(path).columns
+
+    assert cols(f"{row_state}/metrics") == [
+        "file", "n_rows", "n_failed_rows", "n_violations", "pass", "snapshot_id"]
+    assert cols(f"{row_state}/violations") == ["id"] + REPORT_COLS
+    assert cols(f"{json_state}/metrics") == [
+        "snapshot_id", "file", "n_rows", "n_failed_rows", "n_violations", "pass",
+        "clean_typed_ok"]
+    assert cols(f"{json_state}/violations") == (
+        ["id", "file"] + REPORT_COLS + ["snapshot_id"])
+
+
+@pytest.mark.parametrize("store", ["metrics", "violations"])
+def test_json_checkpoint_swap_crash_keeps_other_snapshots(spark, tmp_path,
+                                                          monkeypatch, store):
+    """A reprocess killed at the stage-in rename of its state swap loses
+    no other snapshot's rows: the next run restores the store."""
+    import os
+
+    from jsonschemaparse_spark.plans.checkpoint import run_json_with_checkpoint
+
+    data, state = str(tmp_path / "in"), str(tmp_path / "state")
+    spark.createDataFrame(
+        [(i, '{"k": %d}' % i) for i in range(50)], "id long, doc string"
+    ).coalesce(1).write.parquet(data)
+    for snap in ("a", "b"):
+        run_json_with_checkpoint(spark, data, "doc", JSON_RULES, state,
+                                 snapshot_id=snap)
+
+    def by_snapshot(name):
+        rows = spark.read.parquet(f"{state}/{name}").groupBy("snapshot_id").count()
+        return {r["snapshot_id"]: r["count"] for r in rows.collect()}
+
+    before = {name: by_snapshot(name) for name in ("metrics", "violations")}
+    assert before["violations"]["a"] == 19  # k = 31..49 break maximum 30
+
+    target, real_rename = os.path.join(state, store), os.rename
+
+    def rename(src, dst, *a, **kw):
+        if os.fspath(dst) == target:
+            raise OSError("injected crash at the stage-in rename")
+        return real_rename(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError, match="injected"):
+        run_json_with_checkpoint(spark, data, "doc", JSON_RULES, state,
+                                 snapshot_id="b", reprocess=True)
+    monkeypatch.setattr(os, "rename", real_rename)
+
+    rerun = run_json_with_checkpoint(spark, data, "doc", JSON_RULES, state,
+                                     snapshot_id="a")
+    assert rerun.n_files_skipped == rerun.n_files_total == 1
+    again = run_json_with_checkpoint(spark, data, "doc", JSON_RULES, state,
+                                     snapshot_id="b", reprocess=True)
+    assert again.engine_used == "typed"
+    assert {name: by_snapshot(name) for name in before} == before

@@ -214,6 +214,11 @@ def test_heavy_ruleset_stays_in_codegen(spark):
     assert res.annotated.collect()[0][VALID_COL] is True
 
 
+def test_fallback_param_validated(documents):
+    with pytest.raises(ValueError, match="fallback"):
+        validate_dataframe(documents, DOC_RULES, fallback="nevr")
+
+
 # =========================================================================
 # moved from test_round4_fixes.py (round-fix regression pins, split by
 # topic per VERDICT r5 #8)
