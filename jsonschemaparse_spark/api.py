@@ -304,18 +304,23 @@ def parse_info(text: str | bytes, schema=None, annotations: bool = True,
     duplication — Evaluator docstring); annotations are then empty, and
     positions on quirk-mode rows are BEST-EFFORT (the dropped item-0 path
     segment makes some rows alias a shallower map entry — combine
-    positions with the default report shape when you need both exact)."""
-    reviver = None
-    if _is_options_dict(schema):
-        schema, opt_kw, reviver = _split_options(schema)
-        big_number = opt_kw.get("big_number", big_number)
-        interoperable = opt_kw.get("interoperable", interoperable)
-        max_number_length = opt_kw.get("max_number_length", max_number_length)
-        limits = opt_kw.get("limits", limits)
-        charset = opt_kw.get("charset", charset)
-        parse_value = opt_kw.get("parse_value", parse_value)
-        annotations = opt_kw.get("annotations", annotations)
-        nice_number = opt_kw.get("nice_number", nice_number)
+    positions with the default report shape when you need both exact).
+
+    An options dict in the schema position (the reference's options form)
+    is translated by _split_options; its keys override the keywords."""
+    schema, opt_kw, reviver = _split_options(schema)
+    kw = dict(annotations=annotations, extensions=extensions, limits=limits,
+              syntax=syntax, big_number=big_number,
+              interoperable=interoperable, max_number_length=max_number_length,
+              reference_quirks=reference_quirks, charset=charset,
+              parse_value=parse_value, nice_number=nice_number)
+    return _parse_info(text, schema, reviver, **(kw | opt_kw))
+
+
+def _parse_info(text, schema, reviver, *, annotations, extensions, limits,
+                syntax, big_number, interoperable, max_number_length,
+                reference_quirks, charset, parse_value,
+                nice_number) -> ParseInfo:
     if isinstance(text, (bytes, bytearray)):
         _charset_gate(text, charset)
         try:
@@ -406,26 +411,19 @@ class StreamParser:
         from .schema.incremental import IncrementalJSONParser
 
         if _is_options_dict(schema):
-            # reference options-dict form (review #1: this surface silently
-            # compiled the options object AS a schema before; r5 review #3:
-            # the detection now matches parse/parse_info — any reference
-            # option key routes, schema-less option dicts included)
-            opts = schema
-            schema = opts.get("schema")
-            big_number = opts.get("bigNumber", big_number)
-            nice_number = opts.get("niceNumber", nice_number)
-            max_number_length = opts.get("maxNumberLength", max_number_length)
-            interoperable = bool(opts.get("interoperable", interoperable))
-            charset = opts.get("charset", charset)
-            reviver = opts.get("reviver", reviver)
-            caps = {"maxStringLength": "max_string_length",
-                    "maxKeyLength": "max_key_length",
-                    "maxItems": "max_items", "maxProperties": "max_properties"}
-            if limits is None and any(c in opts for c in caps):
-                from .schema.evaluate import ResourceLimits
-
-                limits = ResourceLimits(
-                    **{py: opts[js] for js, py in caps.items() if js in opts})
+            # reference options-dict form, translated by the same
+            # _split_options as parse/parse_info. Its keys override the
+            # keywords, except that an explicit `limits` wins over the caps;
+            # parseValue and parseAnnotations have no meaning here
+            schema, opt_kw, opt_reviver = _split_options(schema)
+            big_number = opt_kw.get("big_number", big_number)
+            nice_number = opt_kw.get("nice_number", nice_number)
+            max_number_length = opt_kw.get("max_number_length", max_number_length)
+            interoperable = opt_kw.get("interoperable", interoperable)
+            charset = opt_kw.get("charset", charset)
+            reviver = opt_reviver or reviver
+            if limits is None:
+                limits = opt_kw.get("limits")
 
         self._charset = charset
         # source-side counters for the transcoded (relaxed-syntax) path,

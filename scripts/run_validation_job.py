@@ -57,8 +57,10 @@ def main() -> None:
 
     with open(args.rules) as fh:
         ruleset = json.load(fh)
-    # plain JSON-Schema docs are accepted as {"schema": ...}
-    if not (set(ruleset) <= {"schema", "unique", "referential", "drift"}):
+    # plain JSON-Schema docs, boolean schemas included, are accepted as
+    # {"schema": ...}
+    if not (isinstance(ruleset, dict)
+            and set(ruleset) <= {"schema", "unique", "referential", "drift"}):
         ruleset = {"schema": ruleset}
     suite = compile_rule_suite(ruleset)
     key_cols = args.key_cols.split(",")

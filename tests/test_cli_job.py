@@ -1,6 +1,7 @@
 """scripts/run_validation_job.py end to end: a --json-col --state run, the
-same command again (resume), then --reprocess (typed skip). Each run is
-its own process, because main() stops its Spark session."""
+same command again (resume), then --reprocess (typed skip); and a flat run
+with a boolean rules document. Each run is its own process, because
+main() stops its Spark session."""
 
 import json
 import os
@@ -15,15 +16,16 @@ REPO = Path(__file__).resolve().parents[1]
 RULES = {"type": "object", "properties": {"k": {"type": "number", "maximum": 50}}}
 
 
-def _job(tmp_path, *extra):
+def _job(tmp_path, *extra, json_state=True):
     env = dict(os.environ)
     env["PYTHONPATH"] = os.pathsep.join(filter(None, [str(REPO), env.get("PYTHONPATH")]))
     cmd = [
         sys.executable, str(REPO / "scripts" / "run_validation_job.py"),
         "--input", str(tmp_path / "in"), "--rules", str(tmp_path / "rules.json"),
-        "--output", str(tmp_path / "out"), "--state", str(tmp_path / "state"),
-        "--json-col", "doc", "--key-cols", "id", *extra,
+        "--output", str(tmp_path / "out"), "--key-cols", "id", *extra,
     ]
+    if json_state:
+        cmd += ["--state", str(tmp_path / "state"), "--json-col", "doc"]
     proc = subprocess.run(cmd, env=env, cwd=tmp_path, capture_output=True,
                           text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-3000:]
@@ -52,3 +54,18 @@ def test_json_state_resume_and_typed_reprocess(tmp_path):
     reprocessed = _job(tmp_path, "--reprocess")
     assert reprocessed["engine_used"] == "typed"
     assert reprocessed["n_files_typed"] == 2
+
+
+def test_flat_run_with_boolean_false_rules(tmp_path):
+    """A draft 2019-09 boolean schema is a valid rules document: `false`
+    fails every row."""
+    (tmp_path / "in").mkdir()
+    pq.write_table(pa.table({"id": [1, 2, 3], "k": [5, 60, 7]}),
+                   tmp_path / "in" / "part-0.parquet")
+    (tmp_path / "rules.json").write_text("false")
+
+    summary = _job(tmp_path, json_state=False)
+    assert summary["pass"] is False
+    assert (summary["rows"]["n_rows"], summary["rows"]["n_failed_rows"]) == (3, 3)
+    verdicts = pq.read_table(tmp_path / "out" / "verdicts")
+    assert sum(verdicts.column("n_failed_rows").to_pylist()) == 3

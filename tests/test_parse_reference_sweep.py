@@ -292,9 +292,13 @@ ARRAY_SCHEMA = {
 }
 
 
-def test_parseinfo_schema_must_be_schema():  # parseInfo.test.js:92-99
+@pytest.mark.parametrize("surface", [
+    lambda opts: parse_info('[ { "_id": "1" } ]', opts),
+    StreamParser,
+], ids=["parse_info", "StreamParser"])
+def test_parseinfo_schema_must_be_schema(surface):  # parseInfo.test.js:92-99
     with pytest.raises(SchemaError, match="schema must be instance of Schema"):
-        parse_info('[ { "_id": "1" } ]', {"schema": []})
+        surface({"schema": []})
 
 
 def test_parseinfo_schema_pass_fail():  # parseInfo.test.js:100-111

@@ -1,5 +1,6 @@
-"""Every scripts/*.py byte-compiles. No other test imports the scripts, so
-this is what catches a syntax error in one."""
+"""Every scripts/*.py byte-compiles. Apart from scaling.py (imported by
+test_scaling_driver.py) and run_validation_job.py (run by test_cli_job.py)
+no test runs the scripts, so this is what catches a syntax error in one."""
 
 import py_compile
 from pathlib import Path
