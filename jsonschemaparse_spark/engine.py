@@ -98,10 +98,7 @@ class RuleSuiteReport:
 
     @property
     def passed(self) -> bool:
-        row_ok = True
-        if self.row_result is not None:
-            row_ok = self.row_result.summary()["pass"]
-        return row_ok and all(c.passed for c in self.table_checks)
+        return self.summary()["pass"]
 
     def summary(self) -> dict:
         out: dict[str, Any] = {
@@ -111,9 +108,11 @@ class RuleSuiteReport:
                 for c in self.table_checks
             ],
         }
+        passed = all(c.passed for c in self.table_checks)
         if self.row_result is not None:
             out["rows"] = self.row_result.summary()
-        out["pass"] = self.passed
+            passed = passed and out["rows"]["pass"]
+        out["pass"] = passed
         return out
 
 

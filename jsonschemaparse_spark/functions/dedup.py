@@ -228,7 +228,6 @@ def minhash_signatures_agg(
     num_hashes: int = 8,
     k: int = 3,
     hash_mode: str = "portable",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(doc, sig array) via generator-expression hashing + MIN aggregate.
 
@@ -246,7 +245,7 @@ def minhash_signatures_agg(
     the HOF formulation needed."""
     # single-split inputs would run the whole explode+partial-agg in one
     # task; spread the NARROW (id, text) projection first
-    df = ensure_parallelism(df.select(id_col, text_col), num_partitions)
+    df = ensure_parallelism(df.select(id_col, text_col))
     # r5 execution-shape fix: the former (doc, _w, explode(idxs)) select
     # let CollapseProject move the `_w = split(normalize(text))` projection
     # ABOVE the Generate, re-running the regex+split once per exploded
@@ -288,7 +287,6 @@ def _banded_rows(
     bands: int,
     k: int,
     hash_mode: str,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(doc, band_id, band_hash): one row per document per band. The ONE
     definition of band layout/hashing — minhash_candidates' skip filter
@@ -296,7 +294,7 @@ def _banded_rows(
     they cannot drift apart (r5 review #7)."""
     rows_per_band = num_hashes // bands
     with_sig = minhash_signatures_agg(
-        df, id_col, text_col, num_hashes, k, hash_mode, num_partitions
+        df, id_col, text_col, num_hashes, k, hash_mode
     )
     return with_sig.select(
         F.col("doc"),
@@ -357,7 +355,7 @@ def minhash_candidates(
     (SimplifyExtractValueOps: element_at(array(_h...), i) -> _hi).
     """
     banded = _banded_rows(df, id_col, text_col, num_hashes, bands, k,
-                          hash_mode, num_partitions)
+                          hash_mode)
     # r5 execution-shape revision: collect each bucket's doc list and
     # generate the within-bucket pairs IN-PLAN (sorted array + nested
     # transform) instead of self-joining `banded` with itself. The

@@ -45,8 +45,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..idioms import ensure_parallelism
-
 
 def pack_sequences(df: DataFrame, id_col: str, count_col: str,
                    seq_len: int, n_blocks: int = 256) -> DataFrame:
@@ -69,12 +67,6 @@ def pack_sequences(df: DataFrame, id_col: str, count_col: str,
     a NULL id raises rather than silently placing the doc."""
     if seq_len <= 0:
         raise ValueError("seq_len must be positive")
-    # r7: spread few-split inputs — the caller's (possibly expensive,
-    # e.g. token_count) count projection otherwise evaluates on the
-    # input's split count in the window exchange's map stage
-    # (1.75 s -> 1.62 s at sf1.0; output identical — block ids derive
-    # from id VALUES, not partitioning; pass-through on real corpora)
-    df = ensure_parallelism(df)
     cid, ccnt = F.col(id_col), F.col(count_col)
     cnt = F.greatest(F.coalesce(ccnt.cast("long"), F.lit(0)), F.lit(0))
 

@@ -1,6 +1,6 @@
 """Two Spark idioms the operators share, kept in one copy each.
 
-- ``ensure_parallelism``: spread a few-split input across the cores
+- ``ensure_parallelism``: spread a few-split scan across the cores
   before an interpreted (CodegenFallback) or Python/Arrow operator.
 - ``bind_once``: evaluate a column expression once per row and hand it
   to an array builder as a lambda variable.
@@ -17,27 +17,35 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def ensure_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Round-robin `df` into `target` partitions (default: the context's
-    defaultParallelism) when it has fewer than max(target // 2, 2);
-    real multi-split inputs pass through shuffle-free.
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Round-robin `df` into defaultParallelism partitions when its plan
+    is a scan plus narrow operators with fewer than
+    max(defaultParallelism // 2, 2) splits. Reading that split count
+    plans the query and launches no Spark job.
 
-    A streaming frame passes through unchanged: it has no partition count
-    to probe. Every other frame's partition count is read through df.rdd,
-    and a failing probe raises instead of silently turning spreading off.
-
-    What the probe costs (measured on Spark 4.1.2, AQE on): on a plain
-    file scan it only plans the query and launches no Spark job. On a
-    plan with a shuffle it runs the upstream map stages as jobs of their
-    own and returns the post-AQE partition count; an action on any frame
-    derived from `df` (the spread one included) runs those stages again
-    unless `df` is persisted."""
-    if df.isStreaming:
+    Streaming frames and frames whose plan has an exchange or a cached
+    relation pass through: AQE sizes post-shuffle partitions, and the
+    split count of such a plan is read by running its upstream stages."""
+    if df.isStreaming or _exchanged_or_cached(df):
         return df
-    target = target or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < max(target // 2, 2):
         return df.repartition(target)
     return df
+
+
+def _exchanged_or_cached(df: DataFrame) -> bool:
+    # AQE wraps every plan that has an exchange in AdaptiveSparkPlan
+    nodes = [df._jdf.queryExecution().executedPlan()]
+    while nodes:
+        node = nodes.pop()
+        name = node.nodeName()
+        if name.startswith(("AdaptiveSparkPlan", "InMemoryTableScan")) \
+                or "Exchange" in name:
+            return True
+        kids = node.children()
+        nodes += [kids.apply(i) for i in range(kids.size())]
+    return False
 
 
 def bind_once(value: Column, build: Callable[[Column], Column]) -> Column:

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..sources.maintenance import restore_swap
 from .kernels import VIOLATION_STRUCT
 from .validator import (
     ValidationResult,
@@ -110,7 +111,7 @@ def _swap_write(frame: DataFrame, path: str) -> None:
     from the deleted files). Stage to `<path>.__jsp_stage`, then swap in
     compact_parquet's order: live aside to `<path>.__jsp_old`, stage in,
     drop the old copy. A kill at any step leaves a complete store at
-    `path` or at `<path>.__jsp_old`, and _restore_swap settles it at the
+    `path` or at `<path>.__jsp_old`, and restore_swap settles it at the
     start of the next run. No row-count check or concurrent-append
     rollback as in compact_parquet: the runner is the store's only
     writer."""
@@ -120,17 +121,6 @@ def _swap_write(frame: DataFrame, path: str) -> None:
         os.rename(path, old)
     os.rename(stage, path)
     shutil.rmtree(old, ignore_errors=True)
-
-
-def _restore_swap(path: str) -> None:
-    """Settle a _swap_write that a killed run left behind."""
-    old = f"{path}.__jsp_old"
-    if not os.path.exists(old):
-        return
-    if os.path.exists(path):
-        shutil.rmtree(old)  # killed while dropping the old copy
-    else:
-        os.rename(old, path)  # killed between the two renames
 
 
 def run_with_checkpoint(
@@ -233,8 +223,8 @@ def run_json_with_checkpoint(
     keys = key_columns(df, key_cols or None)
     metrics_path = _metrics_path(state_dir)
     violations_path = _violations_path(state_dir)
-    _restore_swap(metrics_path)
-    _restore_swap(violations_path)
+    for store in (metrics_path, violations_path):
+        restore_swap(store, f"{store}.__jsp_old")
     prior_rows = _prior_metrics(spark, metrics_path, snapshot_id, _JSON_METRICS)
     done = {r["file"] for r in prior_rows}
     clean_ok = {r["file"] for r in prior_rows if r["clean_typed_ok"]}

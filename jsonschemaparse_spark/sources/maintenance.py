@@ -13,8 +13,8 @@ Safety: the rewrite goes to a STAGING sibling directory first and the
 swap is two renames (live -> .old, staging -> live) with the .old kept
 until the new listing is verified readable — the materialize_index
 stage-then-swap convention (r6 second review: drop-first shapes can
-destroy their own source). Crash between the renames leaves either the
-original or both directories on disk, never neither.
+destroy their own source). A killed call leaves the original at the
+path or under .old, and the next call settles it first (restore_swap).
 
 Row-count verification is part of the contract (compact_parquet
 returns (n_files_before, n_files_after, n_rows)): a compaction that
@@ -23,6 +23,7 @@ loses rows must raise, not report success."""
 from __future__ import annotations
 
 import math
+import os
 import shutil
 from pathlib import Path
 
@@ -44,6 +45,18 @@ def _local_path(path: str) -> Path:
 
 def _parquet_files(p: Path) -> "list[Path]":
     return [f for f in p.rglob("*.parquet") if f.is_file()]
+
+
+def restore_swap(live: "str | Path", old: "str | Path") -> None:
+    """Settle a stage-then-swap that a killed run left behind: rename
+    `old` back when `live` is missing (killed between the two renames),
+    drop it when both exist (killed while dropping the old copy)."""
+    if not os.path.exists(old):
+        return
+    if os.path.exists(live):
+        shutil.rmtree(old)
+    else:
+        os.rename(old, live)
 
 
 def compact_parquet(
@@ -71,6 +84,8 @@ def compact_parquet(
       the swap is rolled back and the call raises — quiesce writers or
       re-run; the alternative was silently deleting their rows."""
     p = _local_path(path)
+    old = p.with_name("." + p.name + ".__jsp_old__")
+    restore_swap(p, old)
     if (p / "_spark_metadata").exists():
         raise ValueError(
             f"{path} is a streaming file-sink directory (_spark_metadata "
@@ -111,8 +126,6 @@ def compact_parquet(
             f"compaction row-count mismatch: {n_rows} -> {new_rows}; "
             "staging discarded, original untouched")
 
-    old = p.with_name("." + p.name + ".__jsp_old__")
-    shutil.rmtree(old, ignore_errors=True)
     p.rename(old)
     try:
         staging.rename(p)

@@ -9,13 +9,14 @@
       Write explain('formatted') of the named __spark_entry__.queries()
       entries (default: all of them) at SF, imported from the tree DIR
       (default: this repo), to OUT/<query>_<TAG>.txt (default OUT:
-      this repo's plans/). Dump two trees under two tags and diff the
-      files to show a change leaves plans alone. Mask what differs
-      between processes: expression ids (#n), plan-node counters
-      (plan_id=n), Observation UUIDs and the working directory. Run
-      with PYTHONHASHSEED=0, so IN-lists built from Python sets print in
-      one order, and dump one tree at a time: webpages_flagship writes a
-      fixed temp path.
+      this repo's plans/). What differs between processes is masked
+      before writing: expression ids (#n), plan-node counters
+      (plan_id=n), RDD ids, Observation UUIDs, the tree and working
+      directory paths and lambda variable numbers (x_n). Dump two trees
+      under one tag into two OUT directories and `diff -r` them to show
+      a change leaves plans alone. Run with PYTHONHASHSEED=0, so
+      IN-lists built from Python sets print in one order, and dump one
+      tree at a time: webpages_flagship writes a fixed temp path.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ from __future__ import annotations
 import argparse
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
@@ -37,6 +39,25 @@ def plan_text(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+# (pattern, replacement) pairs that mask what differs between processes
+MASKS = [
+    (re.compile(r"#\d+"), "#n"),
+    (re.compile(r"plan_id=\d+"), "plan_id=n"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[n]"),
+    (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"),
+     "<uuid>"),
+    (re.compile(r"\bx_\d+\b"), "x_n"),
+]
+
+
+def masked(text: str, tree: Path) -> str:
+    for path in sorted({str(tree), os.getcwd()}, key=len, reverse=True):
+        text = text.replace(path, "<tree>")
+    for pattern, repl in MASKS:
+        text = pattern.sub(repl, text)
+    return text
 
 
 def plan_of(df) -> str:
@@ -79,7 +100,7 @@ def dump_queries(tag: str, tree: Path, out_dir: Path,
             print(f"skip {name}: not in queries()")
             continue
         try:
-            text = plan_text(qs[name](spark, SF))
+            text = masked(plan_text(qs[name](spark, SF)), tree)
         except Exception as e:  # noqa: BLE001
             print(f"FAILED {name}: {type(e).__name__}: {e}")
             continue

@@ -77,6 +77,34 @@ def test_rule_suite_end_to_end(spark):
     assert report3.passed is False
 
 
+def test_rule_suite_summary_runs_the_row_kernel_once(spark):
+    """summary() derives "pass" from the rows summary it already holds:
+    one aggregate job over the row kernel, not a second one for pass."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    report = run_rule_suite(
+        docs,
+        {"schema": {"type": "object", "properties": {"text": {"minLength": 1}}},
+         "unique": [{"keys": ["doc_id"]}]},
+        key_cols=["doc_id"],
+    )
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup("", "")
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    s, suite_jobs = jobs("suite-summary", report.summary)
+    _, row_jobs = jobs("rows-summary", report.row_result.summary)
+    assert s["pass"] is True and s["rows"]["n_rows"] == docs.count()
+    # one row-kernel aggregate (2 jobs with AQE: map stage + result);
+    # deriving "pass" from a second summary() made it 4
+    assert suite_jobs == row_jobs == 2, (suite_jobs, row_jobs)
+    assert report.passed is True
+
 def test_rule_suite_uniqueness_violation(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     dup = docs.union(docs.limit(4))

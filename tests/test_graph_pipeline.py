@@ -552,3 +552,64 @@ def test_pagerank_empty_graph(spark):
 
     empty = spark.createDataFrame([], "src long, dst long")
     assert pagerank(empty, n_iters=3).count() == 0
+
+
+def _perfbench_shaped_corpus(spark, tmp_path):
+    """(batch, seen snapshot): 60 gate-passing documents in 4 parquet
+    files, with exact and near duplicates and a 4-way source stratum,
+    against a 10-document prior snapshot."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}ord" for i in range(300)]
+    stop = ["the", "and", "of", "to", "in", "is", "that", "it", "for", "was"]
+
+    def sentence():
+        words = [rng.choice(vocab if j % 3 else stop) for j in range(11)]
+        return " ".join(words).capitalize() + "."
+
+    texts = [" ".join(sentence() for _ in range(7)) for _ in range(60)]
+    texts[10] = texts[0]                      # exact duplicate
+    near = texts[1].split(" ")
+    near[5] = "changed"
+    texts[11] = " ".join(near)                # near duplicate
+    sources = ["web", "news", "forum", "wiki"]
+    rows = [(i + 1, t, sources[i % 4]) for i, t in enumerate(texts)]
+    batch_dir, seen_dir = str(tmp_path / "batch"), str(tmp_path / "seen")
+    spark.createDataFrame(rows, "doc_id long, text string, source string") \
+        .repartition(4).write.parquet(batch_dir)
+    spark.createDataFrame([(t,) for t in texts[50:]], "text string") \
+        .coalesce(1).write.parquet(seen_dir)
+    return spark.read.parquet(batch_dir), spark.read.parquet(seen_dir)
+
+
+def test_clean_corpus_perfbench_shape_job_count(spark, tmp_path):
+    """The Spark jobs of one clean_corpus run shaped like the perfbench
+    job: normalize, seen_df, span dedup, greedy near-dup, mixture,
+    observe_funnel, cleaned frame written."""
+    from jsonschemaparse_spark.functions.pipeline import clean_corpus
+
+    df, seen = _perfbench_shaped_corpus(spark, tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("clean-corpus-pin", "perfbench-shaped clean_corpus")
+    try:
+        res = clean_corpus(
+            df, normalize=True, seen_df=seen, span_dedup=True,
+            near_dup_threshold=0.7, near_dup_mode="greedy",
+            mixture_strata="source", mixture_target_fraction=0.6,
+            observe_funnel=True)
+        res.cleaned.write.parquet(str(tmp_path / "cleaned"))
+        funnel = res.funnel_counts()
+    finally:
+        sc.setJobGroup("", "")
+    jobs = len(sc.statusTracker().getJobIdsForGroup("clean-corpus-pin"))
+    res.unpersist()
+    assert funnel["n_input"] == 60
+    assert funnel["n_after_snapshot"] == 50
+    assert funnel["n_after_exact"] == 49
+    assert funnel["n_after_c4"] == 49
+    assert funnel["n_after_mixture"] == \
+        spark.read.parquet(str(tmp_path / "cleaned")).count() > 0
+    # the count of this input (Spark 4.1.2, local[4], AQE on); it was 27
+    # while the spread read the split count of shuffled and cached frames
+    assert jobs <= 23, jobs

@@ -1,6 +1,8 @@
 """ensure_parallelism, the package's one spread helper: streaming
-pass-through, the one-split spread, and what its probe costs."""
+pass-through, the one-split spread, and that it launches no Spark job
+on a scan, a shuffled, a persisted or a locally checkpointed frame."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from jsonschemaparse_spark.idioms import ensure_parallelism
@@ -27,15 +29,48 @@ def test_one_file_parquet_gets_exactly_one_round_robin(spark, tmp_path):
     assert spread.count() == 200
 
 
-def test_probe_launches_no_job_on_plain_file_scan(spark, tmp_path):
-    df = _one_file_parquet(spark, tmp_path)
+def _jobs_of_spread(spark, df, group):
+    """(ensure_parallelism(df), Spark jobs it launched), with a positive
+    control: an action on `df` in a group of its own is counted."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    sc.setJobGroup("idioms-probe", "spread probe on a file scan")
-    ensure_parallelism(df)
-    # control: an action in a group of its own is seen by the same counter
-    sc.setJobGroup("idioms-action", "count on the same scan")
-    df.count()
-    sc.setJobGroup("", "")
-    assert list(tracker.getJobIdsForGroup("idioms-probe")) == []
-    assert len(tracker.getJobIdsForGroup("idioms-action")) >= 1
+    sc.setJobGroup(group, "spread of " + group)
+    try:
+        out = ensure_parallelism(df)
+        sc.setJobGroup(group + "-action", "count of " + group)
+        df.count()
+    finally:
+        sc.setJobGroup("", "")
+    assert len(tracker.getJobIdsForGroup(group + "-action")) >= 1
+    return out, len(tracker.getJobIdsForGroup(group))
+
+
+def test_probe_launches_no_job_on_plain_file_scan(spark, tmp_path):
+    df = _one_file_parquet(spark, tmp_path)
+    _, jobs = _jobs_of_spread(spark, df, "idioms-probe")
+    assert jobs == 0
+
+
+@pytest.mark.parametrize("shape", ["grouped", "persisted"])
+def test_shuffled_and_persisted_frames_pass_through_without_a_job(
+        spark, tmp_path, shape):
+    """AQE sizes post-shuffle partitions, so reading a split count there
+    would re-run the upstream stages as jobs of their own."""
+    df = _one_file_parquet(spark, tmp_path)
+    if shape == "grouped":
+        df = df.groupBy((F.col("id") % 7).alias("k")).agg(F.count("*").alias("n"))
+    else:
+        df = df.persist()
+    try:
+        out, jobs = _jobs_of_spread(spark, df, f"idioms-{shape}")
+    finally:
+        df.unpersist()
+    assert out is df
+    assert jobs == 0
+
+
+def test_local_checkpoint_frame_launches_no_job(spark, tmp_path):
+    df = _one_file_parquet(spark, tmp_path).localCheckpoint()
+    out, jobs = _jobs_of_spread(spark, df, "idioms-local-checkpoint")
+    assert jobs == 0
+    assert out.count() == 200

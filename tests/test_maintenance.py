@@ -1,5 +1,7 @@
 """Small-file compaction (sources/maintenance.py)."""
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -34,3 +36,31 @@ def test_compact_noop_when_already_compact(spark, tmp_path):
     # tiny target -> desired file count >= current -> leave layout alone
     before, after, n_rows = compact_parquet(spark, path, target_bytes=1)
     assert before == 2 and after == 2 and n_rows == 1000
+
+
+class _Killed(BaseException):
+    """A kill, not an OSError: compact_parquet's rollback does not see it."""
+
+
+def test_compact_killed_between_renames_recovers_on_rerun(spark, tmp_path,
+                                                          monkeypatch):
+    path = str(tmp_path / "frag")
+    spark.range(0, 1000).repartition(8).write.parquet(path)
+    real_rename = Path.rename
+
+    def rename(self, target):
+        if Path(target) == Path(path):  # staging -> live, the second rename
+            raise _Killed()
+        return real_rename(self, target)
+
+    monkeypatch.setattr(Path, "rename", rename)
+    with pytest.raises(_Killed):
+        compact_parquet(spark, path, target_bytes=64 * 1024 * 1024)
+    monkeypatch.undo()
+    assert not Path(path).exists()  # the original sits only in .old
+
+    before, after, n_rows = compact_parquet(
+        spark, path, target_bytes=64 * 1024 * 1024)
+    assert (before, after, n_rows) == (8, 1, 1000)
+    assert spark.read.parquet(path).count() == 1000
+    assert [d.name for d in tmp_path.iterdir() if "__jsp" in d.name] == []
