@@ -137,15 +137,24 @@ def materialize_index(index: InvertedIndex, table: str, *,
 
     Reserved names: the swap stages into `<table>__jsp_stage` and
     `<table>_overflow__jsp_stage` and renames the live tables aside to
-    `<table>__jsp_old` / `<table>_overflow__jsp_old`. Any existing
-    table under one of those four names is dropped, data included. The
-    swap is single-writer: the tableExists -> RENAME sequence is not
-    atomic, so two callers materializing the same `table` at once can
-    interleave and lose one write."""
+    `<table>__jsp_old` / `<table>_overflow__jsp_old`. An existing stage
+    table is dropped, data included; an existing `__jsp_old` table is
+    renamed back when its live table is missing (a killed swap) and
+    dropped otherwise. The swap is single-writer: the tableExists ->
+    RENAME sequence is not atomic, so two callers materializing the
+    same `table` at once can interleave and lose one write."""
     from ..plans.bucketing import drop_table_and_location, write_bucketed
 
     spark = index.postings.sparkSession
     overflow_table = f"{table}_overflow"
+    old_p, old_o = f"{table}__jsp_old", f"{overflow_table}__jsp_old"
+    # settle a swap a killed call left behind (restore_swap's rule) BEFORE
+    # the stage write, which may read the live table's files
+    for live, old in ((table, old_p), (overflow_table, old_o)):
+        if spark.catalog.tableExists(old) and not spark.catalog.tableExists(live):
+            spark.sql(f"ALTER TABLE {old} RENAME TO {live}")
+        else:
+            drop_table_and_location(spark, old)
     # STAGE-THEN-SWAP: the index being re-materialized may already READ
     # from the target table (the refresh/rebucket call); dropping the
     # target first would rmtree the very files the write scans (r6
@@ -162,9 +171,6 @@ def materialize_index(index: InvertedIndex, table: str, *,
     # matching maintenance.compact_parquet's 'original or both, never
     # neither' guarantee. The old drop-then-rename order had a window
     # with no published table at all.
-    old_p, old_o = f"{table}__jsp_old", f"{overflow_table}__jsp_old"
-    drop_table_and_location(spark, old_p)
-    drop_table_and_location(spark, old_o)
     if spark.catalog.tableExists(table):
         spark.sql(f"ALTER TABLE {table} RENAME TO {old_p}")
     if spark.catalog.tableExists(overflow_table):

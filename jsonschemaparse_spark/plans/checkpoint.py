@@ -17,6 +17,7 @@ from __future__ import annotations
 import os
 import shutil
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,7 +76,7 @@ def _read_verdicts(spark, metrics_path: str, snapshot_id: str,
     files on a fresh state dir; the bare read would raise
     AnalysisException, ADVICE r4)."""
     if os.path.exists(metrics_path):
-        return spark.read.parquet(metrics_path).filter(
+        return spark.read.schema(schema).parquet(metrics_path).filter(
             F.col("snapshot_id") == snapshot_id
         )
     return spark.createDataFrame([], schema)
@@ -136,7 +137,8 @@ def run_with_checkpoint(
     Per-file metrics: (snapshot_id, file, n_rows, n_failed_rows,
     n_violations, pass). Files already recorded for this snapshot_id are
     pruned from the scan (file-list pushdown: the skipped files are never
-    opened — check the plan's file listing)."""
+    opened — check the plan's file listing). One persisted evaluation of
+    the report columns feeds both state writes."""
     df, all_files = _input_files(spark, input_path)
     keys = key_columns(df, key_cols or None)
     metrics_path = _metrics_path(state_dir)
@@ -151,14 +153,21 @@ def run_with_checkpoint(
         # object (validate_dataframe excludes internal columns), and passing
         # it as a KEY column threads it through every engine path (Column,
         # per-column fallback, whole-row Arrow) to the annotated output.
+        # Every data column is validated: read the pending files' schema.
         res = validate_dataframe(
             spark.read.parquet(*todo).withColumn(_FILE_COL, F.input_file_name()),
             rules, key_cols=keys + [_FILE_COL],
         )
-        _per_file(res).withColumn("snapshot_id", F.lit(snapshot_id)) \
-            .write.mode("append").parquet(metrics_path)
-        violations = res.violations().drop(_FILE_COL)
-        violations.write.mode("append").parquet(_violations_path(state_dir))
+        res.annotated = res.annotated.select(*(  # what the writes read
+            c for c in res.annotated.columns if c in keys or c.startswith("_jsp_")
+        )).persist()
+        try:
+            _per_file(res).withColumn("snapshot_id", F.lit(snapshot_id)) \
+                .write.mode("append").parquet(metrics_path)
+            violations = res.violations().drop(_FILE_COL)
+            violations.write.mode("append").parquet(_violations_path(state_dir))
+        finally:
+            res.annotated.unpersist()
     else:
         violations = _empty_violations(spark, df, keys)
 
@@ -174,7 +183,7 @@ def run_with_checkpoint(
 @dataclass
 class CheckpointedJsonRun:
     verdicts: DataFrame      # one row per input file (completed or fresh)
-    violations: DataFrame    # violations from files processed THIS run
+    violations: DataFrame    # THIS run's, scanned from the state: see below
     n_files_total: int
     n_files_skipped: int
     n_files_typed: int       # files revalidated on the UDF-free typed plan
@@ -215,8 +224,11 @@ def run_json_with_checkpoint(
     (_swap_write) — never an in-lineage overwrite of the parquet being
     read (r4 review finding #4: the self-overwrite hazard); a run first
     settles any swap a killed run left behind. Lineage/skip
-    semantics match run_with_checkpoint (file-granular, pruned scans)."""
-    from .json_validator import validate_json_column
+    semantics match run_with_checkpoint (file-granular, pruned scans).
+    One persisted evaluation feeds both state writes. The returned
+    violations are this run's rows scanned from the state: write or
+    collect them before a reprocess run on the same state_dir swaps it."""
+    from . import json_validator as jv  # looked up per call: tracers patch it
 
     FLAG = "_jsp_rescue_flag"
     df, all_files = _input_files(spark, input_path)
@@ -229,85 +241,72 @@ def run_json_with_checkpoint(
     done = {r["file"] for r in prior_rows}
     clean_ok = {r["file"] for r in prior_rows if r["clean_typed_ok"]}
 
-    if reprocess:
-        typed_files = [f for f in all_files if f in clean_ok]
-        auto_files = [f for f in all_files if f not in clean_ok]
-        skipped = 0
-    else:
-        typed_files = []
-        auto_files = [f for f in all_files if f not in done]
-        skipped = len(all_files) - len(auto_files)
+    typed_files = [f for f in all_files if reprocess and f in clean_ok]
+    auto_files = [f for f in all_files if f not in (clean_ok if reprocess else done)]
 
-    all_violations = []
-    fresh_metrics_rows = []
-    n_typed = 0
-
-    def _run(files, engine):
-        part = spark.read.parquet(*files).withColumn(_FILE_COL, F.input_file_name())
+    # the input's schema holds for the JSON and key columns: no footer job
+    read_schema = StructType([df.schema[c] for c in dict.fromkeys([json_col, *keys])])
+    results = []
+    for files, engine in ((auto_files, "auto"), (typed_files, "typed")):
+        if not files:
+            continue
+        part = spark.read.schema(read_schema).parquet(*files) \
+            .withColumn(_FILE_COL, F.input_file_name())
         if engine == "typed":
             # revalidate on the EXACT struct the hybrid routed through, so
             # the identical-results guarantee is schema-for-schema, not
             # merely equivalent-by-inference
-            from .json_validator import _typed_route_schema, validate_json_typed
-
             cs = _compiled(rules)
-            res = validate_json_typed(
-                part, json_col, cs, _typed_route_schema(cs),
+            res = jv.validate_json_typed(
+                part, json_col, cs, jv._typed_route_schema(cs),
                 key_cols=keys + [_FILE_COL], extensions=False,
             )
             res.annotated = res.annotated.withColumn(FLAG, F.lit(False))
         else:
-            res = validate_json_column(
+            res = jv.validate_json_column(
                 part, json_col, rules, key_cols=keys + [_FILE_COL],
                 engine=engine, keep_flag_col=FLAG,
             )
-        per_file = _per_file(
-            res, F.sum(F.col(FLAG).cast("long")).alias("n_flagged")
-        ).collect()  # one tiny row per file
-        for r in per_file:
-            fresh_metrics_rows.append(
-                (snapshot_id, r["file"], r["n_rows"], r["n_failed_rows"],
-                 r["n_violations"], r["pass"], (r["n_flagged"] or 0) == 0)
-            )
-        all_violations.append(
+        res.annotated = res.annotated.persist()  # keys and _jsp_ columns only
+        results.append(res)
+
+    if results:
+        metrics = reduce(DataFrame.unionByName, [
+            _per_file(res, (~F.bool_or(FLAG)).alias("clean_typed_ok"))
+            .withColumn("snapshot_id", F.lit(snapshot_id))
+            .select(*StructType.fromDDL(_JSON_METRICS).fieldNames())
+            for res in results
+        ])
+        fresh_viols = reduce(DataFrame.unionByName, [
             res.violations()
             .withColumnRenamed(_FILE_COL, "file")
             .withColumn("snapshot_id", F.lit(snapshot_id))
+            for res in results
+        ])
+        # metrics before violations: a file still pending then has no
+        # violation rows for this snapshot, so the read-back below holds
+        # exactly this run's rows
+        try:
+            for frame, path in ((metrics, metrics_path),
+                                (fresh_viols, violations_path)):
+                if reprocess and os.path.exists(path):
+                    # supersede, don't append: re-running the same files
+                    # would otherwise duplicate their rows in the durable
+                    # store (r4 review finding #3)
+                    keep = spark.read.schema(frame.schema).parquet(path) \
+                        .filter(F.col("snapshot_id") != snapshot_id)
+                    _swap_write(keep.unionByName(frame), path)
+                else:
+                    frame.write.mode("append").parquet(path)
+        finally:
+            for res in results:
+                res.annotated.unpersist()
+        violations = (
+            spark.read.schema(fresh_viols.schema).parquet(violations_path)
+            .filter((F.col("snapshot_id") == snapshot_id)
+                    & F.col("file").isin(auto_files + typed_files))
+            .drop("snapshot_id", "file")
         )
-        return res
-
-    if auto_files:
-        _run(auto_files, "auto")
-    if typed_files:
-        _run(typed_files, "typed")
-        n_typed = len(typed_files)
-
-    # persist fresh state; reprocess REPLACES this snapshot's rows
-    if fresh_metrics_rows:
-        fresh = spark.createDataFrame(fresh_metrics_rows, _JSON_METRICS)
-        if reprocess and os.path.exists(metrics_path):
-            keep = spark.read.parquet(metrics_path).filter(
-                F.col("snapshot_id") != snapshot_id
-            )
-            _swap_write(keep.unionByName(fresh), metrics_path)
-        else:
-            fresh.write.mode("append").parquet(metrics_path)
-
-    if all_violations:
-        fresh_viols = all_violations[0]
-        for v in all_violations[1:]:
-            fresh_viols = fresh_viols.unionByName(v)
-        if reprocess and os.path.exists(violations_path):
-            # supersede, don't append: re-running the same files would
-            # otherwise duplicate their rows in the durable store (r4
-            # review finding #3)
-            keep = spark.read.parquet(violations_path).filter(
-                F.col("snapshot_id") != snapshot_id
-            )
-            _swap_write(keep.unionByName(fresh_viols), violations_path)
-        else:
-            fresh_viols.write.mode("append").parquet(violations_path)
-        violations = fresh_viols.drop("snapshot_id", "file")
     else:
         violations = _empty_violations(spark, df, keys)
 
@@ -320,7 +319,7 @@ def run_json_with_checkpoint(
         verdicts=verdicts,
         violations=violations,
         n_files_total=len(all_files),
-        n_files_skipped=skipped,
-        n_files_typed=n_typed,
+        n_files_skipped=len(all_files) - len(auto_files) - len(typed_files),
+        n_files_typed=len(typed_files),
         engine_used=engine_used,
     )

@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 from ..schema.compiler import CompiledSchema, compile_rules
 from .kernels import (
     VIOLATION_ARRAY,
+    VIOLATION_FIELDS,
     ColumnCompiler,
     ExpressionFallback,
 )
@@ -142,13 +143,24 @@ class ValidationResult:
         violating rows reach the join — at web scale that's the trickle,
         not the stream. Per-column-fallback violations (full encoding)
         union in at the end."""
-        v = F.explode(F.col(VIOLATIONS_COL)).alias("v")
+        def full_report(col: str) -> DataFrame:
+            # positioned results (validate_json_column(positions=True))
+            # carry line/column in the struct — surface them as columns
+            fields = self.annotated.schema[col].dataType.elementType.fieldNames()
+            pos = ["line", "column"] if "line" in fields else []
+            return self.annotated.select(
+                *self.key_cols, F.explode(F.col(col)).alias("v")
+            ).select(*self.key_cols,
+                     *(F.col(f"v.{f}").alias(f) for f in VIOLATION_FIELDS + pos))
+
         if self.rule_table is not None:
             from .kernels import RULE_TABLE_SCHEMA
 
             spark = self.annotated.sparkSession
             rules_df = spark.createDataFrame(self.rule_table or [], RULE_TABLE_SCHEMA)
-            exploded = self.annotated.select(*self.key_cols, v).select(
+            exploded = self.annotated.select(
+                *self.key_cols, F.explode(F.col(VIOLATIONS_COL)).alias("v")
+            ).select(
                 *self.key_cols,
                 F.col("v.rule_id").alias("rule_id"),
                 F.col("v.path").alias("path"),
@@ -164,40 +176,9 @@ class ValidationResult:
                 "actual", "message",
             )
         else:
-            # positioned results (validate_json_column(positions=True))
-            # carry line/column in the struct — surface them as columns
-            vfields = {
-                f.name
-                for f in self.annotated.schema[VIOLATIONS_COL]
-                .dataType.elementType.fields
-            }
-            pos_cols = (
-                [F.col("v.line").alias("line"), F.col("v.column").alias("column")]
-                if "line" in vfields else []
-            )
-            out = self.annotated.select(*self.key_cols, v).select(
-                *self.key_cols,
-                F.col("v.constraint_id").alias("constraint_id"),
-                F.col("v.path").alias("path"),
-                F.col("v.keyword").alias("keyword"),
-                F.col("v.expected").alias("expected"),
-                F.col("v.actual").alias("actual"),
-                F.col("v.message").alias("message"),
-                *pos_cols,
-            )
+            out = full_report(VIOLATIONS_COL)
         if self.py_viols_col is not None:
-            pv = F.explode(F.col(self.py_viols_col)).alias("v")
-            out = out.unionByName(
-                self.annotated.select(*self.key_cols, pv).select(
-                    *self.key_cols,
-                    F.col("v.constraint_id").alias("constraint_id"),
-                    F.col("v.path").alias("path"),
-                    F.col("v.keyword").alias("keyword"),
-                    F.col("v.expected").alias("expected"),
-                    F.col("v.actual").alias("actual"),
-                    F.col("v.message").alias("message"),
-                )
-            )
+            out = out.unionByName(full_report(self.py_viols_col))
         return out
 
     def _n_viols(self) -> Column:

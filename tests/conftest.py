@@ -10,6 +10,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF01_DIR = "/root/testdata/sf0.01"
 
 
+class Killed(BaseException):
+    """A kill in a test: not an Exception, so no handler or rollback in
+    the code under test sees it."""
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

@@ -167,3 +167,37 @@ def test_materialize_index_bucket_pruned_lookup(spark):
     assert {r["token"] for r in mat3.overflow.collect()} == {"cat"}
     spark.sql("DROP TABLE IF EXISTS jsp_test_posting_idx")
     spark.sql("DROP TABLE IF EXISTS jsp_test_posting_idx_overflow")
+
+
+def test_materialize_index_killed_at_stage_in_recovers_on_rerun(spark,
+                                                                 monkeypatch):
+    """A refresh killed at the stage-in rename leaves the live postings
+    only under `__jsp_old`; the rerun of the same refresh renames them
+    back before its stage write reads them, and returns every row."""
+    from pyspark.sql import SparkSession
+
+    from conftest import Killed
+    from jsonschemaparse_spark.functions.index import materialize_index
+
+    name = "jsp_test_killed_idx"
+    mat = materialize_index(build_inverted_index(_corpus(spark, [
+        "the cat sat", "dog ran far", "cat naps"])), name, n_buckets=4)
+    want = sorted(mat.postings.collect())
+    real_sql = SparkSession.sql
+
+    def sql(self, query, *a, **kw):
+        if query == f"ALTER TABLE {name}__jsp_stage RENAME TO {name}":
+            raise Killed()
+        return real_sql(self, query, *a, **kw)
+
+    monkeypatch.setattr(SparkSession, "sql", sql)
+    with pytest.raises(Killed):
+        materialize_index(mat, name, n_buckets=4)  # reads the live table
+    monkeypatch.undo()
+    assert not spark.catalog.tableExists(name)
+
+    again = materialize_index(mat, name, n_buckets=4)
+    assert sorted(again.postings.collect()) == want
+    assert [t.name for t in spark.catalog.listTables() if "__jsp" in t.name] == []
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    spark.sql(f"DROP TABLE IF EXISTS {name}_overflow")

@@ -5,6 +5,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import Killed
 from jsonschemaparse_spark.sources.maintenance import compact_parquet
 
 
@@ -38,10 +39,6 @@ def test_compact_noop_when_already_compact(spark, tmp_path):
     assert before == 2 and after == 2 and n_rows == 1000
 
 
-class _Killed(BaseException):
-    """A kill, not an OSError: compact_parquet's rollback does not see it."""
-
-
 def test_compact_killed_between_renames_recovers_on_rerun(spark, tmp_path,
                                                           monkeypatch):
     path = str(tmp_path / "frag")
@@ -50,11 +47,11 @@ def test_compact_killed_between_renames_recovers_on_rerun(spark, tmp_path,
 
     def rename(self, target):
         if Path(target) == Path(path):  # staging -> live, the second rename
-            raise _Killed()
+            raise Killed()
         return real_rename(self, target)
 
     monkeypatch.setattr(Path, "rename", rename)
-    with pytest.raises(_Killed):
+    with pytest.raises(Killed):
         compact_parquet(spark, path, target_bytes=64 * 1024 * 1024)
     monkeypatch.undo()
     assert not Path(path).exists()  # the original sits only in .old

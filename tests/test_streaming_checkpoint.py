@@ -211,8 +211,23 @@ def _verdict_map(run):
     }
 
 
-def test_json_checkpoint_kill_rerun_and_typed_skip(spark, tmp_path_factory):
+def test_json_checkpoint_kill_rerun_and_typed_skip(spark, tmp_path_factory,
+                                                   monkeypatch):
+    import jsonschemaparse_spark.plans.json_validator as jv
     from jsonschemaparse_spark.plans.checkpoint import run_json_with_checkpoint
+
+    # record every result the runner builds (it looks the validators up
+    # on their module at call time)
+    built = []
+
+    def recording(real):
+        def wrapper(*a, **kw):
+            built.append(real(*a, **kw))
+            return built[-1]
+        return wrapper
+
+    for name in ("validate_json_column", "validate_json_typed"):
+        monkeypatch.setattr(jv, name, recording(getattr(jv, name)))
 
     data = str(tmp_path_factory.mktemp("json_data"))
     state = str(tmp_path_factory.mktemp("json_state"))
@@ -227,7 +242,7 @@ def test_json_checkpoint_kill_rerun_and_typed_skip(spark, tmp_path_factory):
     assert (r1.n_files_total, r1.n_files_skipped, r1.engine_used) == (1, 0, "auto")
     assert all(r["clean_typed_ok"] for r in r1.verdicts.collect())
     # the hybrid first pass carries the Python rescue stage in-plan
-    assert "Python" in _plan(r1.violations)
+    assert len(built) == 1 and "Python" in _plan(built[0].annotated)
     v1 = _verdict_map(r1)
 
     # "kill" after batch 1's state landed; new data arrives
@@ -249,11 +264,13 @@ def test_json_checkpoint_kill_rerun_and_typed_skip(spark, tmp_path_factory):
     )  # resumed runs accumulated exactly the fresh run's violation rows
 
     # reprocess: every file proved clean -> UDF-free typed plan end-to-end
+    n_built = len(built)
     r3 = run_json_with_checkpoint(
         spark, data, "doc", JSON_RULES, state, reprocess=True
     )
     assert (r3.engine_used, r3.n_files_typed) == ("typed", 2)
-    assert "Python" not in _plan(r3.violations)  # the skipped stage, absent
+    assert len(built) == n_built + 1  # one evaluation for both files
+    assert "Python" not in _plan(built[-1].annotated)  # the skipped stage
     assert _verdict_map(r3) == v2  # identical verdicts, rows, violations
 
 
@@ -512,8 +529,10 @@ def test_checkpoint_state_columns_and_cold_run_jobs(spark, tmp_path):
     jrun, json_jobs = _jobs_of(spark, "ckpt-json-cold", lambda: run_json_with_checkpoint(
         spark, data, "doc", JSON_RULES, json_state, key_cols=["id"]))
     assert jrun.n_files_total == 3
-    # the counts of this input at the seed (Spark 4.1.2, local[4], AQE on)
-    assert row_jobs <= 9 and json_jobs <= 10, (row_jobs, json_jobs)
+    # the counts of this input (Spark 4.1.2, local[4], AQE on): the row
+    # runner still infers the pending files' schema, a footer job; the
+    # JSON runner reads its two columns with the input's schema
+    assert row_jobs <= 9 and json_jobs <= 8, (row_jobs, json_jobs)
 
     def cols(path):
         return spark.read.parquet(path).columns
@@ -526,6 +545,51 @@ def test_checkpoint_state_columns_and_cold_run_jobs(spark, tmp_path):
         "clean_typed_ok"]
     assert cols(f"{json_state}/violations") == (
         ["id", "file"] + REPORT_COLS + ["snapshot_id"])
+
+
+def test_checkpoint_resume_validates_a_column_an_appended_file_adds(spark,
+                                                                     tmp_path):
+    """The row runner validates every data column of the PENDING files,
+    so a file appended with a new column has that column checked on
+    resume, though the input's schema (one file's footer) lacks it."""
+    from jsonschemaparse_spark.plans.checkpoint import run_with_checkpoint
+
+    data, state = tmp_path / "in", str(tmp_path / "state")
+    rules = {"properties": {"id": {"type": "integer"},
+                            "b": {"type": "integer", "maximum": 5}}}
+    spark.range(10).write.parquet(str(data / "a"))
+    first = run_with_checkpoint(spark, str(data / "a"), rules, state,
+                                key_cols=["id"])
+    assert first.violations.count() == 0
+    spark.range(10, 20).withColumn("b", F.col("id")).write.parquet(str(data / "z"))
+    for f in (data / "z").glob("*.parquet"):
+        f.rename(data / "a" / f"z-{f.name}")  # sorts after the first file
+
+    run = run_with_checkpoint(spark, str(data / "a"), rules, state,
+                              key_cols=["id"])
+    assert run.n_files_skipped >= 1
+    assert sorted(r["id"] for r in run.violations.collect()) == list(range(10, 20))
+    assert {r["keyword"] for r in run.violations.collect()} == {"maximum"}
+
+
+def test_json_checkpoint_returns_the_violations_it_wrote(spark, tmp_path):
+    """The returned violations are the rows the run made durable, read
+    back from the state: acting on them runs no validator, even on the
+    Arrow route where every document goes through Python."""
+    from jsonschemaparse_spark.plans.checkpoint import run_json_with_checkpoint
+
+    data, state = str(tmp_path / "in"), str(tmp_path / "state")
+    spark.createDataFrame(
+        [(i, '{"s": "%s"}' % ("a" * (i % 3) or "b")) for i in range(30)],
+        "id long, doc string",
+    ).repartition(2).write.parquet(data)
+    rules = {"properties": {"s": {"type": "string", "pattern": "^a+$"}}}
+
+    run = run_json_with_checkpoint(spark, data, "doc", rules, state)
+    plan = _plan(run.violations)  # the Arrow route plans as MapInPandas
+    assert not any(n in plan for n in ("Python", "MapInPandas", "MapInArrow")), plan
+    assert sorted(r["id"] for r in run.violations.collect()) == list(range(0, 30, 3))
+    assert run.violations.columns == ["id"] + REPORT_COLS
 
 
 @pytest.mark.parametrize("store", ["metrics", "violations"])
