@@ -10,7 +10,7 @@ provenance per SURVEY.md §1.2.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 
@@ -87,15 +87,3 @@ def expected_type(actual: str, allowed_types: list[str]) -> str:
     if len(allowed_types) == 1:
         return "Unexpected " + actual + ": Expected " + allowed_types[0]
     return "Unexpected " + actual + ": Expected one of " + ", ".join(allowed_types)
-
-
-@dataclass
-class ValidationOutcome:
-    """Result of validating one instance: verdict + accumulated records."""
-
-    errors: list[ValidationRecord] = field(default_factory=list)
-    annotations: list[AnnotationRecord] = field(default_factory=list)
-
-    @property
-    def valid(self) -> bool:
-        return not self.errors

@@ -178,16 +178,6 @@ def _fast_shingle_hashes(w: Column, k: int) -> Column:
     ).otherwise(F.abs(F.xxhash64(F.array_join(w, " "))) % MINHASH_P))
 
 
-def _minhash_one(sh: Column, perm: int) -> Column:
-    """Min over the perm-th universal hash of each shingle. Kept for the
-    oracle-parity query; minhash_signature computes all perms in one
-    traversal instead."""
-    a, b = _MINHASH_A[perm], _MINHASH_B[perm]
-    return F.array_min(
-        F.transform(sh, lambda s: (F.lit(a) * shingle_hash(s) + F.lit(b)) % F.lit(MINHASH_P))
-    )
-
-
 def minhash_signature(text: Column, num_hashes: int = 8, k: int = 3,
                       hash_mode: str = "portable") -> Column:
     """All permutation minima in ONE traversal of the hashed-shingle array

@@ -148,17 +148,6 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return bucket
 
 
-def with_lsh_bucket(
-    corpus: DataFrame,
-    dim: int,
-    n_planes: int = 8,
-    vec_col: str = "embedding",
-    out_col: str = "lsh_bucket",
-    seed: int = 42,
-) -> DataFrame:
-    return corpus.withColumn(out_col, lsh_bucket(F.col(vec_col), _hyperplanes(dim, n_planes, seed)))
-
-
 def lsh_topk(
     corpus: DataFrame,
     query: Sequence[float],

@@ -50,11 +50,6 @@ def canonical_url(url: Column) -> Column:
     return u
 
 
-def with_canonical_url(df: DataFrame, url_col: str = "url",
-                       out_col: str = "canonical_url") -> DataFrame:
-    return df.withColumn(out_col, canonical_url(F.col(url_col)))
-
-
 def url_duplicate_groups(df: DataFrame, id_col: str,
                          url_col: str = "url") -> DataFrame:
     """(canonical_url, n_docs, doc_ids) groups with >1 member — exact

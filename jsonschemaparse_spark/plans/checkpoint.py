@@ -1,23 +1,30 @@
 """Checkpoint/resume with per-unit lineage + metrics (north rule M7).
 
-The resumable unit is the INPUT FILE (parquet split): the sandbox stand-in
-for an Iceberg snapshot's file manifest. A state table under `state_dir`
-records (snapshot_id, file) -> metrics for every completed unit; re-runs
-skip completed units and only validate new ones, then verdicts are the union
-of stored + fresh metrics. This is the distributed analog of the reference's
-`done` promise / incremental writes (parse.js:224-233, 318-326): progress is
-durable at unit granularity, and a killed run resumes where it left off.
+The resumable unit is the INPUT FILE (parquet split), the sandbox stand-in
+for an Iceberg snapshot's file manifest; snapshot_id is a caller's label.
+As with the reference's `done` promise (parse.js:224-233, 318-326), a
+file is done exactly when its output is durable, and re-runs skip it.
 
-On Iceberg the same design keys on (snapshot_id, manifest file); here the
-snapshot_id is a caller-supplied label (e.g. the input dir's mtime hash).
+A run is one batch with one commit, as in Structured Streaming's commit
+log (SIGMOD 2018). It appends its metric and violation rows at the roots
+of the two stores under `state_dir` (flat, since `spark.read.parquet`
+skips subdirectories: NOTES), then renames a manifest into
+`_commits/<n>.json` naming the snapshot, the input files processed, the
+data files added and the batches it supersedes. Readers read only live
+files, those of committed unsuperseded batches; any other `part-*` file
+is garbage, deleted at the start of a run and after its commit. A kill
+thus leaves the old state or the new one. A state dir from before the
+log is adopted, its reads filtered by snapshot_id.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import shutil
 from dataclasses import dataclass
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,7 +33,6 @@ from pyspark.sql.types import StructType
 from ..sources.maintenance import restore_swap
 from .kernels import VIOLATION_STRUCT
 from .validator import (
-    ValidationResult,
     _compiled,
     key_columns,
     validate_dataframe,
@@ -34,9 +40,10 @@ from .validator import (
 )
 
 _FILE_COL = "_jsp_file"
-# per-file metric rows, in the column ORDER each runner writes them, so
-# a fresh-state empty frame never reorders vs an existing-state read
-# (r5 review #8)
+_COMMITS = "_commits"
+_STORES = ("metrics", "violations")
+# per-file metric rows, in the column ORDER each runner writes them, so a
+# fresh-state empty frame never reorders vs a stored read (r5 review #8)
 _ROW_METRICS = ("file string, n_rows long, n_failed_rows long, "
                 "n_violations long, pass boolean, snapshot_id string")
 _JSON_METRICS = ("snapshot_id string, file string, n_rows long, "
@@ -47,81 +54,153 @@ _JSON_METRICS = ("snapshot_id string, file string, n_rows long, "
 @dataclass
 class CheckpointedRun:
     verdicts: DataFrame      # one row per input file (completed or fresh)
-    violations: DataFrame    # violations from files processed THIS run
+    violations: DataFrame    # THIS run's batch: read until a reprocess of it
     n_files_total: int
     n_files_skipped: int
 
 
-def _metrics_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "metrics")
+def _part_files(state_dir: str, store: str) -> list[str]:
+    pattern = os.path.join(glob.escape(state_dir), store, "part-*")
+    return sorted(os.path.basename(p) for p in glob.glob(pattern))
 
 
-def _violations_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "violations")
+def _manifests(state_dir: str) -> list[dict]:
+    """The committed manifests in commit order, read on the driver."""
+    out = []
+    for path in glob.glob(os.path.join(glob.escape(state_dir), _COMMITS, "*.json")):
+        with open(path) as fh:
+            out.append(json.load(fh))
+    return sorted(out, key=lambda m: m["n"])
 
 
-def _input_files(spark, input_path: str) -> tuple[DataFrame, list[str]]:
-    """The input frame and its distinct files, the resumable units."""
-    df = spark.read.parquet(input_path)
-    files = [
-        r["f"] for r in df.select(F.input_file_name().alias("f")).distinct().collect()
-    ]
-    return df, files
+def _live(manifests: list[dict], snapshot_id=None) -> list[dict]:
+    """The manifests of `snapshot_id` (of any snapshot when None) that no
+    later manifest supersedes."""
+    dead = {n for m in manifests for n in m["supersedes"]}
+    return [m for m in manifests
+            if m["n"] not in dead and snapshot_id in (None, m["snapshot_id"])]
 
 
-def _read_verdicts(spark, metrics_path: str, snapshot_id: str,
-                   schema: str) -> DataFrame:
-    """This snapshot's per-file metric rows — or an empty frame with the
-    same schema when the metrics store was never written (zero input
-    files on a fresh state dir; the bare read would raise
-    AnalysisException, ADVICE r4)."""
-    if os.path.exists(metrics_path):
-        return spark.read.schema(schema).parquet(metrics_path).filter(
-            F.col("snapshot_id") == snapshot_id
-        )
-    return spark.createDataFrame([], schema)
+def _read(spark, state_dir: str, snapshot_id: str, store: str,
+          manifests: list[dict], schema) -> DataFrame:
+    """This snapshot's rows of `store` in the files `manifests` name,
+    read with the known schema (no footer job). Only adopted files hold
+    other snapshots' rows; a store without the column has none."""
+    files = [os.path.join(state_dir, store, f)
+             for m in manifests for f in m["data"][store]]
+    if not files:
+        return spark.createDataFrame([], schema)
+    df = spark.read.schema(schema).parquet(*files)
+    if "snapshot_id" in df.columns:
+        df = df.filter(F.col("snapshot_id") == snapshot_id)
+    return df
 
 
-def _prior_metrics(spark, metrics_path: str, snapshot_id: str, schema: str) -> list:
-    """_read_verdicts, collected. A fresh state dir returns [] without
-    collecting the empty frame, which would cost a Spark job."""
-    if not os.path.exists(metrics_path):
-        return []
-    return _read_verdicts(spark, metrics_path, snapshot_id, schema).collect()
+def _adopt_legacy(spark, state_dir: str) -> None:
+    """Give a state dir its commit log before any batch is written. A dir
+    from before the log (its killed swap settled) gets one manifest per
+    snapshot its metrics record, each naming all the stores' files. The
+    log is staged aside and renamed in: a kill leaves the dir as it was."""
+    log = os.path.join(state_dir, _COMMITS)
+    if os.path.isdir(log):
+        return
+    for store in _STORES:
+        path = os.path.join(state_dir, store)
+        restore_swap(path, f"{path}.__jsp_old")
+    stage = f"{log}.__jsp_stage"
+    os.makedirs(stage, exist_ok=True)
+    data = {store: _part_files(state_dir, store) for store in _STORES}
+    if data["metrics"]:
+        inputs: dict[str, list[str]] = {}
+        for snap, f in spark.read.schema("snapshot_id string, file string") \
+                .parquet(os.path.join(state_dir, "metrics")).distinct().collect():
+            inputs.setdefault(snap, []).append(f)
+        for n, snap in enumerate(sorted(inputs)):
+            with open(os.path.join(stage, f"{n}.json"), "w") as fh:
+                json.dump({"n": n, "snapshot_id": snap, "inputs": inputs[snap],
+                           "data": data, "supersedes": []}, fh)
+    os.rename(stage, log)
 
 
-def _per_file(res: ValidationResult, *extra) -> DataFrame:
-    """One verdict row per input file (plus any `extra` aggregates)."""
-    return verdict_rollup(
-        res.annotated.groupBy(F.col(_FILE_COL).alias("file")), res._n_viols(), *extra
-    )
+def _collect_garbage(state_dir: str, manifests: list[dict]) -> None:
+    """Delete each store's data files that no live manifest names, with
+    their checksums, and the `_temporary` dir an interrupted write
+    leaves (its committed tasks would merge into the next append)."""
+    live = _live(manifests)
+    for store in _STORES:
+        path = os.path.join(state_dir, store)
+        keep = {f for m in live for f in m["data"][store]}
+        for f in sorted(set(_part_files(state_dir, store)) - keep):
+            for name in (f".{f}.crc", f):  # a kill leaves no lone checksum
+                if os.path.exists(os.path.join(path, name)):
+                    os.remove(os.path.join(path, name))
+        if os.path.isdir(os.path.join(path, "_temporary")):
+            shutil.rmtree(os.path.join(path, "_temporary"))
 
 
-def _empty_violations(spark, df: DataFrame, keys: list[str]) -> DataFrame:
-    """A run with nothing fresh returns an EMPTY frame with the real
-    violations schema (key cols + 6 report fields), so downstream
-    appends/unions don't produce a schema-mismatched parquet dir."""
-    schema = StructType([df.schema[k] for k in keys] + VIOLATION_STRUCT.fields)
-    return spark.createDataFrame([], schema)
+class _Run:
+    """One run: the input's files, the state's commit log (adopted and
+    cleared of garbage first), the done set, and the one commit step."""
 
+    def __init__(self, spark, input_path, state_dir, snapshot_id, key_cols):
+        self.spark, self.state_dir, self.snapshot_id = spark, state_dir, snapshot_id
+        self.read = partial(_read, spark, state_dir, snapshot_id)
+        self.df = spark.read.parquet(input_path)
+        # the units: the scan's listing runs no Spark job, names each file
+        # as input_file_name() does, and includes zero-row files
+        self.files = sorted(self.df.inputFiles())
+        self.keys = key_columns(self.df, key_cols or None)
+        _adopt_legacy(spark, state_dir)
+        self.log = _manifests(state_dir)
+        _collect_garbage(state_dir, self.log)
+        self.live = _live(self.log, snapshot_id)
+        self.done = {f for m in self.live for f in m["inputs"]}
 
-def _swap_write(frame: DataFrame, path: str) -> None:
-    """Replace the parquet store at `path` with `frame`. The frame may
-    READ `path`, so an in-place overwrite would delete its own source
-    mid-computation (cache eviction / lost-executor replay recomputes
-    from the deleted files). Stage to `<path>.__jsp_stage`, then swap in
-    compact_parquet's order: live aside to `<path>.__jsp_old`, stage in,
-    drop the old copy. A kill at any step leaves a complete store at
-    `path` or at `<path>.__jsp_old`, and restore_swap settles it at the
-    start of the next run. No row-count check or concurrent-append
-    rollback as in compact_parquet: the runner is the store's only
-    writer."""
-    stage, old = f"{path}.__jsp_stage", f"{path}.__jsp_old"
-    frame.write.mode("overwrite").parquet(stage)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(stage, path)
-    shutil.rmtree(old, ignore_errors=True)
+    def commit(self, inputs, results, metrics_ddl, *extra, violations_of,
+               supersede=False) -> tuple[DataFrame, DataFrame]:
+        """Append the rows of `results` (over the `inputs` files), commit
+        them as one batch (superseding this snapshot's live ones if
+        `supersede`), and return the verdicts (this snapshot's live
+        metrics) and this batch's violations. One persisted evaluation of
+        each result feeds both writes."""
+        snap = self.snapshot_id
+        if not results:  # EMPTY, but with the real schema: appends of it stay valid
+            return self.read("metrics", self.live, metrics_ddl), self.read(
+                "violations", [], StructType([self.df.schema[k] for k in self.keys]
+                                             + VIOLATION_STRUCT.fields))
+        for res in results:  # persist only what the writes read
+            res.annotated = res.annotated.select(*(c for c in res.annotated.columns if (
+                c in self.keys or c.startswith("_jsp_")))).persist()
+        names = StructType.fromDDL(metrics_ddl).fieldNames()
+        frames = {
+            "metrics": reduce(DataFrame.unionByName, [  # a row per file
+                verdict_rollup(res.annotated.groupBy(F.col(_FILE_COL).alias("file")),
+                               res._n_viols(), *extra)
+                .withColumn("snapshot_id", F.lit(snap)).select(*names)
+                for res in results]),
+            "violations": reduce(DataFrame.unionByName,
+                                 [violations_of(res) for res in results]),
+        }
+        batch = {"n": self.log[-1]["n"] + 1 if self.log else 0,
+                 "snapshot_id": snap, "inputs": inputs, "data": {},
+                 "supersedes": [m["n"] for m in self.live] if supersede else []}
+        try:
+            for store, frame in frames.items():
+                before = set(_part_files(self.state_dir, store))
+                frame.write.mode("append").parquet(os.path.join(self.state_dir, store))
+                batch["data"][store] = [
+                    f for f in _part_files(self.state_dir, store) if f not in before]
+        finally:
+            for res in results:
+                res.annotated.unpersist()
+        manifest = os.path.join(self.state_dir, _COMMITS, f"{batch['n']}.json")
+        with open(manifest + ".tmp", "w") as fh:
+            json.dump(batch, fh)
+        os.replace(manifest + ".tmp", manifest)  # the commit
+        self.log.append(batch)
+        _collect_garbage(self.state_dir, self.log)
+        return (self.read("metrics", _live(self.log, snap), metrics_ddl),
+                self.read("violations", [batch], frames["violations"].schema))
 
 
 def run_with_checkpoint(
@@ -132,20 +211,12 @@ def run_with_checkpoint(
     snapshot_id: str = "snap0",
     key_cols=None,
 ) -> CheckpointedRun:
-    """Validate `input_path` (parquet), resuming from `state_dir`.
-
-    Per-file metrics: (snapshot_id, file, n_rows, n_failed_rows,
-    n_violations, pass). Files already recorded for this snapshot_id are
-    pruned from the scan (file-list pushdown: the skipped files are never
-    opened — check the plan's file listing). One persisted evaluation of
-    the report columns feeds both state writes."""
-    df, all_files = _input_files(spark, input_path)
-    keys = key_columns(df, key_cols or None)
-    metrics_path = _metrics_path(state_dir)
-    prior_rows = _prior_metrics(spark, metrics_path, snapshot_id, _ROW_METRICS)
-    done = {r["file"] for r in prior_rows}
-    todo = [f for f in all_files if f not in done]
-
+    """Validate `input_path` (parquet), resuming from `state_dir`. Files
+    already done for this snapshot_id are pruned from the scan (file-list
+    pushdown: the skipped files are never opened)."""
+    run = _Run(spark, input_path, state_dir, snapshot_id, key_cols)
+    todo = [f for f in run.files if f not in run.done]
+    results = []
     if todo:
         # Capture the file AT SCAN TIME: input_file_name() evaluated above a
         # later exchange (the Arrow fallback path repartitions) returns ''.
@@ -154,36 +225,25 @@ def run_with_checkpoint(
         # it as a KEY column threads it through every engine path (Column,
         # per-column fallback, whole-row Arrow) to the annotated output.
         # Every data column is validated: read the pending files' schema.
-        res = validate_dataframe(
+        results.append(validate_dataframe(
             spark.read.parquet(*todo).withColumn(_FILE_COL, F.input_file_name()),
-            rules, key_cols=keys + [_FILE_COL],
-        )
-        res.annotated = res.annotated.select(*(  # what the writes read
-            c for c in res.annotated.columns if c in keys or c.startswith("_jsp_")
-        )).persist()
-        try:
-            _per_file(res).withColumn("snapshot_id", F.lit(snapshot_id)) \
-                .write.mode("append").parquet(metrics_path)
-            violations = res.violations().drop(_FILE_COL)
-            violations.write.mode("append").parquet(_violations_path(state_dir))
-        finally:
-            res.annotated.unpersist()
-    else:
-        violations = _empty_violations(spark, df, keys)
-
-    verdicts = _read_verdicts(spark, metrics_path, snapshot_id, _ROW_METRICS)
+            rules, key_cols=run.keys + [_FILE_COL],
+        ))
+    verdicts, violations = run.commit(
+        todo, results, _ROW_METRICS,
+        violations_of=lambda res: res.violations().drop(_FILE_COL))
     return CheckpointedRun(
         verdicts=verdicts,
         violations=violations,
-        n_files_total=len(all_files),
-        n_files_skipped=len(all_files) - len(todo),
+        n_files_total=len(run.files),
+        n_files_skipped=len(run.files) - len(todo),
     )
 
 
 @dataclass
 class CheckpointedJsonRun:
     verdicts: DataFrame      # one row per input file (completed or fresh)
-    violations: DataFrame    # THIS run's, scanned from the state: see below
+    violations: DataFrame    # THIS run's, as CheckpointedRun.violations
     n_files_total: int
     n_files_skipped: int
     n_files_typed: int       # files revalidated on the UDF-free typed plan
@@ -200,126 +260,63 @@ def run_json_with_checkpoint(
     key_cols=None,
     reprocess: bool = False,
 ) -> CheckpointedJsonRun:
-    """JSON-column checkpointed validation with the SOUND typed-skip
-    (VERDICT r2/r3 stretch, end-to-end): every run records, PER FILE,
-    whether any of that file's rows was routed to the Python rescue UDF —
-    the hybrid path's needs_py flag surfaced as a column
-    (validate_json_column(keep_flag_col=...)), aggregated in the same
-    per-file pass as the metrics (r4 review finding #5: the run-wide
-    Observation would let one dirty file block every clean file's
-    graduation). On `reprocess=True`, files whose prior run recorded zero
-    flagged rows are revalidated with engine='typed' on the exact struct
-    the hybrid routed through: identical results BY CONSTRUCTION (zero
-    flagged rows means the JVM from_json verdicts were never overridden)
-    and the plan carries no Python stage (plan-asserted in
-    tests/test_streaming_checkpoint.py). Files with flagged rows, or
-    whose run used the Arrow path (flag column is all-True there), stay
-    on engine='auto'.
-
-    State (both snapshot-keyed so reprocess can supersede):
-    - metrics:    (snapshot_id, file, n_rows, n_failed_rows, n_violations,
-                   pass, clean_typed_ok)
-    - violations: report rows + (snapshot_id, file)
-    Reprocess rewrites replace this snapshot's rows via stage-then-swap
-    (_swap_write) — never an in-lineage overwrite of the parquet being
-    read (r4 review finding #4: the self-overwrite hazard); a run first
-    settles any swap a killed run left behind. Lineage/skip
-    semantics match run_with_checkpoint (file-granular, pruned scans).
-    One persisted evaluation feeds both state writes. The returned
-    violations are this run's rows scanned from the state: write or
-    collect them before a reprocess run on the same state_dir swaps it."""
+    """JSON-column checkpointed validation with the SOUND typed-skip.
+    Each run records PER FILE whether any row went to the Python rescue
+    UDF (validate_json_column(keep_flag_col=...)), aggregated in the
+    per-file metrics pass, so one dirty file never blocks a clean one.
+    On `reprocess=True`, files whose committed run had zero flagged rows
+    are revalidated with engine='typed' on the exact struct the hybrid
+    routed through: identical results BY CONSTRUCTION, with no Python
+    stage in the plan; other files (flagged rows, or the Arrow path, whose
+    flag is all-True) stay on engine='auto'. The reprocess's batch
+    supersedes this snapshot's earlier ones: nothing is rewritten, and no
+    row is duplicated. Violation rows carry (snapshot_id, file)."""
     from . import json_validator as jv  # looked up per call: tracers patch it
 
     FLAG = "_jsp_rescue_flag"
-    df, all_files = _input_files(spark, input_path)
-    keys = key_columns(df, key_cols or None)
-    metrics_path = _metrics_path(state_dir)
-    violations_path = _violations_path(state_dir)
-    for store in (metrics_path, violations_path):
-        restore_swap(store, f"{store}.__jsp_old")
-    prior_rows = _prior_metrics(spark, metrics_path, snapshot_id, _JSON_METRICS)
-    done = {r["file"] for r in prior_rows}
-    clean_ok = {r["file"] for r in prior_rows if r["clean_typed_ok"]}
-
-    typed_files = [f for f in all_files if reprocess and f in clean_ok]
-    auto_files = [f for f in all_files if f not in (clean_ok if reprocess else done)]
+    run = _Run(spark, input_path, state_dir, snapshot_id, key_cols)
+    clean_ok = set()
+    if reprocess:
+        clean_ok = {r["file"] for r in run.read("metrics", run.live, _JSON_METRICS)
+                    .filter("clean_typed_ok").select("file").collect()}
+    typed_files = [f for f in run.files if f in clean_ok]
+    auto_files = [f for f in run.files if f not in (clean_ok if reprocess else run.done)]
 
     # the input's schema holds for the JSON and key columns: no footer job
-    read_schema = StructType([df.schema[c] for c in dict.fromkeys([json_col, *keys])])
-    results = []
-    for files, engine in ((auto_files, "auto"), (typed_files, "typed")):
-        if not files:
-            continue
-        part = spark.read.schema(read_schema).parquet(*files) \
+    read_schema = StructType(
+        [run.df.schema[c] for c in dict.fromkeys([json_col, *run.keys])])
+    def read(files):
+        return spark.read.schema(read_schema).parquet(*files) \
             .withColumn(_FILE_COL, F.input_file_name())
-        if engine == "typed":
-            # revalidate on the EXACT struct the hybrid routed through, so
-            # the identical-results guarantee is schema-for-schema, not
-            # merely equivalent-by-inference
-            cs = _compiled(rules)
-            res = jv.validate_json_typed(
-                part, json_col, cs, jv._typed_route_schema(cs),
-                key_cols=keys + [_FILE_COL], extensions=False,
-            )
-            res.annotated = res.annotated.withColumn(FLAG, F.lit(False))
-        else:
-            res = jv.validate_json_column(
-                part, json_col, rules, key_cols=keys + [_FILE_COL],
-                engine=engine, keep_flag_col=FLAG,
-            )
-        res.annotated = res.annotated.persist()  # keys and _jsp_ columns only
-        results.append(res)
 
-    if results:
-        metrics = reduce(DataFrame.unionByName, [
-            _per_file(res, (~F.bool_or(FLAG)).alias("clean_typed_ok"))
-            .withColumn("snapshot_id", F.lit(snapshot_id))
-            .select(*StructType.fromDDL(_JSON_METRICS).fieldNames())
-            for res in results
-        ])
-        fresh_viols = reduce(DataFrame.unionByName, [
-            res.violations()
-            .withColumnRenamed(_FILE_COL, "file")
-            .withColumn("snapshot_id", F.lit(snapshot_id))
-            for res in results
-        ])
-        # metrics before violations: a file still pending then has no
-        # violation rows for this snapshot, so the read-back below holds
-        # exactly this run's rows
-        try:
-            for frame, path in ((metrics, metrics_path),
-                                (fresh_viols, violations_path)):
-                if reprocess and os.path.exists(path):
-                    # supersede, don't append: re-running the same files
-                    # would otherwise duplicate their rows in the durable
-                    # store (r4 review finding #3)
-                    keep = spark.read.schema(frame.schema).parquet(path) \
-                        .filter(F.col("snapshot_id") != snapshot_id)
-                    _swap_write(keep.unionByName(frame), path)
-                else:
-                    frame.write.mode("append").parquet(path)
-        finally:
-            for res in results:
-                res.annotated.unpersist()
-        violations = (
-            spark.read.schema(fresh_viols.schema).parquet(violations_path)
-            .filter((F.col("snapshot_id") == snapshot_id)
-                    & F.col("file").isin(auto_files + typed_files))
-            .drop("snapshot_id", "file")
-        )
-    else:
-        violations = _empty_violations(spark, df, keys)
+    results = []
+    if auto_files:
+        results.append(jv.validate_json_column(
+            read(auto_files), json_col, rules, key_cols=run.keys + [_FILE_COL],
+            engine="auto", keep_flag_col=FLAG))
+    if typed_files:  # the hybrid's own struct: schema-for-schema identical
+        cs = _compiled(rules)
+        results.append(jv.validate_json_typed(
+            read(typed_files), json_col, cs, jv._typed_route_schema(cs),
+            key_cols=run.keys + [_FILE_COL], extensions=False))
+        results[-1].annotated = results[-1].annotated.withColumn(FLAG, F.lit(False))
 
-    verdicts = _read_verdicts(spark, metrics_path, snapshot_id, _JSON_METRICS)
+    verdicts, violations = run.commit(
+        auto_files + typed_files, results, _JSON_METRICS,
+        (~F.bool_or(FLAG)).alias("clean_typed_ok"),
+        violations_of=lambda res: res.violations()
+        .withColumnRenamed(_FILE_COL, "file")
+        .withColumn("snapshot_id", F.lit(snapshot_id)),
+        supersede=reprocess)
     engine_used = (
         "mixed" if (auto_files and typed_files)
         else "typed" if typed_files else "auto" if auto_files else "none"
     )
     return CheckpointedJsonRun(
         verdicts=verdicts,
-        violations=violations,
-        n_files_total=len(all_files),
-        n_files_skipped=len(all_files) - len(auto_files) - len(typed_files),
+        violations=violations.drop("snapshot_id", "file"),
+        n_files_total=len(run.files),
+        n_files_skipped=len(run.files) - len(auto_files) - len(typed_files),
         n_files_typed=len(typed_files),
         engine_used=engine_used,
     )

@@ -71,25 +71,6 @@ def empty_violations() -> Column:
     return F.array().cast(COMPACT_ARRAY)
 
 
-def make_violation(
-    constraint_id: str,
-    path: Column,
-    keyword: str,
-    expected: Optional[str],
-    actual: Column,
-    message: Column,
-) -> Column:
-    """Full-form violation struct (Arrow-path shaped helpers/tests)."""
-    return F.struct(
-        F.lit(constraint_id).alias("constraint_id"),
-        path.cast("string").alias("path"),
-        F.lit(keyword).alias("keyword"),
-        (F.lit(expected) if expected is not None else F.lit(None)).cast("string").alias("expected"),
-        actual.cast("string").alias("actual"),
-        message.cast("string").alias("message"),
-    )
-
-
 def _concat(pieces: list[Column]) -> Column:
     pieces = [p for p in pieces if p is not None]
     if not pieces:

@@ -451,19 +451,31 @@ def test_checkpoint_empty_input_no_state(spark, tmp_path):
     empty_in = str(tmp_path / "empty_in")
     spark.createDataFrame([], "id long, doc string") \
         .coalesce(1).write.parquet(empty_in)
-    # parquet dir with a zero-row file still yields 0 distinct input files
+    # the zero-row file is an input file: processed once, with no
+    # verdict row (verdicts group rows by file), and skipped after
     run = run_json_with_checkpoint(
         spark, empty_in, "doc", {"properties": {}},
         state_dir=str(tmp_path / "state_a"), key_cols=["id"],
     )
     assert run.verdicts.count() == 0
-    assert run.n_files_total <= 1 and run.engine_used in ("none", "auto")
+    assert run.n_files_total == 1 and run.engine_used in ("none", "auto")
+    again = run_json_with_checkpoint(
+        spark, empty_in, "doc", {"properties": {}},
+        state_dir=str(tmp_path / "state_a"), key_cols=["id"],
+    )
+    assert (again.n_files_skipped, again.engine_used) == (1, "none")
 
     run2 = run_with_checkpoint(
         spark, empty_in, {"properties": {}},
         state_dir=str(tmp_path / "state_b"), key_cols=["id"],
     )
     assert run2.verdicts.count() == 0
+    assert run2.n_files_total == 1
+    again2 = run_with_checkpoint(
+        spark, empty_in, {"properties": {}},
+        state_dir=str(tmp_path / "state_b"), key_cols=["id"],
+    )
+    assert again2.n_files_skipped == 1
 
 
 def test_checkpoint_verdicts_column_order_consistent(spark, tmp_path):
@@ -489,7 +501,8 @@ def test_checkpoint_verdicts_column_order_consistent(spark, tmp_path):
 
 # =========================================================================
 # what the checkpoint runners must keep: state column lists, Spark job
-# counts of a cold run, and a crash inside the reprocess swap
+# counts per run kind, a reprocess killed at its commit, and a state dir
+# from before the commit log
 # =========================================================================
 REPORT_COLS = ["constraint_id", "path", "keyword", "expected", "actual", "message"]
 ROW_RULES = {"properties": {"id": {"type": "integer", "maximum": 2000}}}
@@ -529,10 +542,27 @@ def test_checkpoint_state_columns_and_cold_run_jobs(spark, tmp_path):
     jrun, json_jobs = _jobs_of(spark, "ckpt-json-cold", lambda: run_json_with_checkpoint(
         spark, data, "doc", JSON_RULES, json_state, key_cols=["id"]))
     assert jrun.n_files_total == 3
-    # the counts of this input (Spark 4.1.2, local[4], AQE on): the row
-    # runner still infers the pending files' schema, a footer job; the
+    # the counts of this input (Spark 4.1.2, local[4], AQE on): listing
+    # the input files runs no job; the input's schema is one footer job,
+    # and the row runner infers the pending files' schema, another; the
     # JSON runner reads its two columns with the input's schema
-    assert row_jobs <= 9 and json_jobs <= 8, (row_jobs, json_jobs)
+    assert row_jobs <= 7 and json_jobs <= 6, (row_jobs, json_jobs)
+    # the row runner's violations are read back from its batch: writing
+    # them scans those files and runs no validator
+    _, write_jobs = _jobs_of(spark, "ckpt-row-out", lambda: run.violations.write
+                             .parquet(str(tmp_path / "out")))
+    # a resume learns its done set from the commit log, on the driver
+    resumed, resume_jobs = _jobs_of(spark, "ckpt-row-resume", lambda: run_with_checkpoint(
+        spark, data, ROW_RULES, row_state, key_cols=["id"]))
+    assert resumed.n_files_skipped == 3
+    # a reprocess reads this snapshot's clean flags (one job) and
+    # rewrites nothing
+    rerun, reprocess_jobs = _jobs_of(spark, "ckpt-json-reprocess", lambda: (
+        run_json_with_checkpoint(spark, data, "doc", JSON_RULES, json_state,
+                                 key_cols=["id"], reprocess=True)))
+    assert rerun.n_files_typed == 3
+    assert write_jobs <= 1 and resume_jobs <= 1 and reprocess_jobs <= 7, (
+        write_jobs, resume_jobs, reprocess_jobs)
 
     def cols(path):
         return spark.read.parquet(path).columns
@@ -595,9 +625,13 @@ def test_json_checkpoint_returns_the_violations_it_wrote(spark, tmp_path):
 @pytest.mark.parametrize("store", ["metrics", "violations"])
 def test_json_checkpoint_swap_crash_keeps_other_snapshots(spark, tmp_path,
                                                           monkeypatch, store):
-    """A reprocess killed at the stage-in rename of its state swap loses
-    no other snapshot's rows: the next run restores the store."""
+    """A reprocess killed at its write into one store (for `violations`,
+    after the metrics files of the batch have landed uncommitted) loses no
+    other snapshot's rows, and the rerun commits."""
     import os
+
+    from conftest import Killed
+    from pyspark.sql.readwriter import DataFrameWriter
 
     from jsonschemaparse_spark.plans.checkpoint import run_json_with_checkpoint
 
@@ -616,18 +650,18 @@ def test_json_checkpoint_swap_crash_keeps_other_snapshots(spark, tmp_path,
     before = {name: by_snapshot(name) for name in ("metrics", "violations")}
     assert before["violations"]["a"] == 19  # k = 31..49 break maximum 30
 
-    target, real_rename = os.path.join(state, store), os.rename
+    target, real_parquet = os.path.join(state, store), DataFrameWriter.parquet
 
-    def rename(src, dst, *a, **kw):
-        if os.fspath(dst) == target:
-            raise OSError("injected crash at the stage-in rename")
-        return real_rename(src, dst, *a, **kw)
+    def parquet(self, path, *a, **kw):
+        if os.fspath(path) == target:
+            raise Killed()
+        return real_parquet(self, path, *a, **kw)
 
-    monkeypatch.setattr(os, "rename", rename)
-    with pytest.raises(OSError, match="injected"):
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(Killed):
         run_json_with_checkpoint(spark, data, "doc", JSON_RULES, state,
                                  snapshot_id="b", reprocess=True)
-    monkeypatch.setattr(os, "rename", real_rename)
+    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
 
     rerun = run_json_with_checkpoint(spark, data, "doc", JSON_RULES, state,
                                      snapshot_id="a")
@@ -636,3 +670,108 @@ def test_json_checkpoint_swap_crash_keeps_other_snapshots(spark, tmp_path,
                                      snapshot_id="b", reprocess=True)
     assert again.engine_used == "typed"
     assert {name: by_snapshot(name) for name in before} == before
+
+
+def test_json_checkpoint_reprocess_killed_at_commit_keeps_other_snapshot(
+        spark, tmp_path, monkeypatch):
+    """A reprocess writes only its own snapshot's rows. Killed at the
+    rename that commits its manifest, it leaves the other snapshot's rows
+    and the data files that hold them (names and sizes) as they were, and
+    the rerun commits."""
+    import os
+
+    from conftest import Killed
+
+    from jsonschemaparse_spark.plans.checkpoint import (
+        _live,
+        _manifests,
+        run_json_with_checkpoint,
+    )
+
+    data, state = str(tmp_path / "in"), str(tmp_path / "state")
+    spark.createDataFrame(
+        [(i, '{"k": %d}' % i) for i in range(50)], "id long, doc string"
+    ).coalesce(1).write.parquet(data)
+    for snap in ("a", "b"):
+        run_json_with_checkpoint(spark, data, "doc", JSON_RULES, state,
+                                 snapshot_id=snap)
+
+    def by_snapshot(name):
+        rows = spark.read.parquet(f"{state}/{name}").groupBy("snapshot_id").count()
+        return {r["snapshot_id"]: r["count"] for r in rows.collect()}
+
+    def files_of(snap):
+        return {(store, f, os.path.getsize(os.path.join(state, store, f)))
+                for m in _live(_manifests(state), snap)
+                for store, files in m["data"].items() for f in files}
+
+    before = {name: by_snapshot(name) for name in ("metrics", "violations")}
+    assert before["violations"]["a"] == 19  # k = 31..49 break maximum 30
+    a_files = files_of("a")
+    real_replace = os.replace
+
+    def replace(src, dst, *a, **kw):
+        if os.path.dirname(os.fspath(dst)) == os.path.join(state, "_commits"):
+            raise Killed()
+        return real_replace(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(Killed):
+        run_json_with_checkpoint(spark, data, "doc", JSON_RULES, state,
+                                 snapshot_id="b", reprocess=True)
+    monkeypatch.setattr(os, "replace", real_replace)
+    assert {name: by_snapshot(name)["a"] for name in before} == {
+        name: before[name]["a"] for name in before}
+    assert files_of("a") == a_files
+
+    rerun = run_json_with_checkpoint(spark, data, "doc", JSON_RULES, state,
+                                     snapshot_id="a")
+    assert rerun.n_files_skipped == rerun.n_files_total == 1
+    again = run_json_with_checkpoint(spark, data, "doc", JSON_RULES, state,
+                                     snapshot_id="b", reprocess=True)
+    assert again.engine_used == "typed"
+    assert {name: by_snapshot(name) for name in before} == before
+    assert files_of("a") == a_files
+
+
+def test_json_checkpoint_adopts_a_state_dir_without_commit_log(spark, tmp_path):
+    """A state dir in the flat layout, with no commit log: two snapshots'
+    rows in one pair of stores, written with the pinned columns. It
+    resumes without revalidating a file, and a reprocess of one snapshot
+    leaves the other's verdicts as they were."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from jsonschemaparse_spark.plans.checkpoint import run_json_with_checkpoint
+
+    data, ref, state = (str(tmp_path / d) for d in ("in", "ref", "state"))
+    spark.createDataFrame(
+        [(i, '{"k": %d}' % i) for i in range(50)], "id long, doc string"
+    ).coalesce(1).write.parquet(data)
+    first = run_json_with_checkpoint(spark, data, "doc", JSON_RULES, ref)
+    for store, frame in (("metrics", first.verdicts),
+                         ("violations", spark.read.parquet(f"{ref}/violations"))):
+        reduce(DataFrame.unionByName, [
+            frame.withColumn("snapshot_id", F.lit(snap)) for snap in ("a", "b")
+        ]).coalesce(1).write.parquet(f"{state}/{store}")
+    assert spark.read.parquet(f"{state}/metrics").columns == [
+        "snapshot_id", "file", "n_rows", "n_failed_rows", "n_violations", "pass",
+        "clean_typed_ok"]
+    assert spark.read.parquet(f"{state}/violations").columns == (
+        ["id", "file"] + REPORT_COLS + ["snapshot_id"])
+    expect = _verdict_map(first)
+
+    for snap in ("a", "b"):
+        run = run_json_with_checkpoint(spark, data, "doc", JSON_RULES, state,
+                                       snapshot_id=snap)
+        assert (run.n_files_skipped, run.engine_used) == (1, "none")
+        assert _verdict_map(run) == expect
+
+    redo = run_json_with_checkpoint(spark, data, "doc", JSON_RULES, state,
+                                    snapshot_id="a", reprocess=True)
+    assert (redo.engine_used, _verdict_map(redo)) == ("typed", expect)
+    assert redo.violations.count() == 19
+    other = run_json_with_checkpoint(spark, data, "doc", JSON_RULES, state,
+                                     snapshot_id="b")
+    assert (other.n_files_skipped, _verdict_map(other)) == (1, expect)
