@@ -10,10 +10,10 @@ log (SIGMOD 2018). It appends its metric and violation rows at the roots
 of the two stores under `state_dir` (flat, since `spark.read.parquet`
 skips subdirectories: NOTES), then renames a manifest into
 `_commits/<n>.json` naming the snapshot, the input files processed, the
-data files added and the batches it supersedes. Readers read only live
-files, those of committed unsuperseded batches; any other `part-*` file
-is garbage, deleted at the start of a run and after its commit. A kill
-thus leaves the old state or the new one. A state dir from before the
+data files added, the violations schema and the batches it supersedes.
+Readers read only live files, those of committed unsuperseded batches;
+any other `part-*` file is garbage, deleted at the start of a run and
+after its commit. A kill thus leaves the old state or the new one. A state dir from before the
 log is adopted, its reads filtered by snapshot_id.
 """
 
@@ -24,7 +24,7 @@ import json
 import os
 import shutil
 from dataclasses import dataclass
-from functools import partial, reduce
+from functools import cached_property, partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,12 +32,7 @@ from pyspark.sql.types import StructType
 
 from ..sources.maintenance import restore_swap
 from .kernels import VIOLATION_STRUCT
-from .validator import (
-    _compiled,
-    key_columns,
-    validate_dataframe,
-    verdict_rollup,
-)
+from .validator import _compiled, validate_dataframe, verdict_rollup
 
 _FILE_COL = "_jsp_file"
 _COMMITS = "_commits"
@@ -144,37 +139,52 @@ class _Run:
 
     def __init__(self, spark, input_path, state_dir, snapshot_id, key_cols):
         self.spark, self.state_dir, self.snapshot_id = spark, state_dir, snapshot_id
+        self.input_path = input_path
         self.read = partial(_read, spark, state_dir, snapshot_id)
-        self.df = spark.read.parquet(input_path)
-        # the units: the scan's listing runs no Spark job, names each file
-        # as input_file_name() does, and includes zero-row files
-        self.files = sorted(self.df.inputFiles())
-        self.keys = key_columns(self.df, key_cols or None)
+        # the units: a read with a given schema lists the input's files and
+        # runs no Spark job; it names each file as input_file_name() does,
+        # and includes zero-row files
+        self.files = sorted(spark.read.schema(StructType()).parquet(input_path)
+                            .inputFiles())
+        self.keys = list(key_cols) if key_cols else [self.schema.names[0]]
         _adopt_legacy(spark, state_dir)
         self.log = _manifests(state_dir)
         _collect_garbage(state_dir, self.log)
         self.live = _live(self.log, snapshot_id)
         self.done = {f for m in self.live for f in m["inputs"]}
 
+    @cached_property
+    def schema(self) -> StructType:
+        """The input's schema (one file's footer: one Spark job), read only
+        when a run needs it: to pick the default key or to read pending
+        files."""
+        return self.spark.read.parquet(self.input_path).schema
+
+    def _key_fields(self) -> list:
+        """The key columns' fields: as the newest batch that has them
+        recorded its violations, else from the input's footer."""
+        for m in reversed(self.log):
+            stored = StructType.fromJson(m.get("schema", {"fields": []}))
+            if set(self.keys) <= set(stored.names):
+                return [stored[k] for k in self.keys]
+        return [self.schema[k] for k in self.keys]
+
     def commit(self, inputs, results, metrics_ddl, *extra, violations_of,
                supersede=False) -> tuple[DataFrame, DataFrame]:
         """Append the rows of `results` (over the `inputs` files), commit
         them as one batch (superseding this snapshot's live ones if
         `supersede`), and return the verdicts (this snapshot's live
-        metrics) and this batch's violations. One persisted evaluation of
-        each result feeds both writes."""
+        metrics) and this batch's violations. Both writes read each
+        result's one evaluation: the first materializes it, the second
+        reads its blocks."""
         snap = self.snapshot_id
         if not results:  # EMPTY, but with the real schema: appends of it stay valid
             return self.read("metrics", self.live, metrics_ddl), self.read(
-                "violations", [], StructType([self.df.schema[k] for k in self.keys]
-                                             + VIOLATION_STRUCT.fields))
-        for res in results:  # persist only what the writes read
-            res.annotated = res.annotated.select(*(c for c in res.annotated.columns if (
-                c in self.keys or c.startswith("_jsp_")))).persist()
+                "violations", [], StructType(self._key_fields() + VIOLATION_STRUCT.fields))
         names = StructType.fromDDL(metrics_ddl).fieldNames()
         frames = {
             "metrics": reduce(DataFrame.unionByName, [  # a row per file
-                verdict_rollup(res.annotated.groupBy(F.col(_FILE_COL).alias("file")),
+                verdict_rollup(res.evaluation().groupBy(F.col(_FILE_COL).alias("file")),
                                res._n_viols(), *extra)
                 .withColumn("snapshot_id", F.lit(snap)).select(*names)
                 for res in results]),
@@ -183,16 +193,13 @@ class _Run:
         }
         batch = {"n": self.log[-1]["n"] + 1 if self.log else 0,
                  "snapshot_id": snap, "inputs": inputs, "data": {},
-                 "supersedes": [m["n"] for m in self.live] if supersede else []}
-        try:
-            for store, frame in frames.items():
-                before = set(_part_files(self.state_dir, store))
-                frame.write.mode("append").parquet(os.path.join(self.state_dir, store))
-                batch["data"][store] = [
-                    f for f in _part_files(self.state_dir, store) if f not in before]
-        finally:
-            for res in results:
-                res.annotated.unpersist()
+                 "supersedes": [m["n"] for m in self.live] if supersede else [],
+                 "schema": frames["violations"].schema.jsonValue()}
+        for store, frame in frames.items():
+            before = set(_part_files(self.state_dir, store))
+            frame.write.mode("append").parquet(os.path.join(self.state_dir, store))
+            batch["data"][store] = [
+                f for f in _part_files(self.state_dir, store) if f not in before]
         manifest = os.path.join(self.state_dir, _COMMITS, f"{batch['n']}.json")
         with open(manifest + ".tmp", "w") as fh:
             json.dump(batch, fh)
@@ -282,11 +289,9 @@ def run_json_with_checkpoint(
     typed_files = [f for f in run.files if f in clean_ok]
     auto_files = [f for f in run.files if f not in (clean_ok if reprocess else run.done)]
 
-    # the input's schema holds for the JSON and key columns: no footer job
-    read_schema = StructType(
-        [run.df.schema[c] for c in dict.fromkeys([json_col, *run.keys])])
-    def read(files):
-        return spark.read.schema(read_schema).parquet(*files) \
+    def read(files):  # the input's schema holds for the JSON and key columns
+        schema = StructType([run.schema[c] for c in dict.fromkeys([json_col, *run.keys])])
+        return spark.read.schema(schema).parquet(*files) \
             .withColumn(_FILE_COL, F.input_file_name())
 
     results = []

@@ -657,4 +657,6 @@ def validate_json_positions(
         df, json_col, rules, key_cols=key_cols, extensions=extensions,
         positions=True,
     )
-    return res.violations()
+    # the result's one report: a plan over `annotated`, not a checkpoint
+    # written and read once
+    return res._report(res.annotated)

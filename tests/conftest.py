@@ -46,6 +46,34 @@ def mutation_points(kill_at=None):
             setattr(owner, name, real)
 
 
+def file_scan_rows(spark, first: int = 0) -> tuple[int, int]:
+    """(input rows of the stages numbered `first` and up that scan files,
+    the number after the last stage), read from the in-process status
+    store as scripts/scaling.py reads shuffle bytes. A stage that reads
+    cached or checkpointed blocks counts input rows too, so only stages
+    whose RDD graph holds a FileScanRDD count."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    stages = store.stageList(None, False, False, sc._gateway.new_array(sc._jvm.double, 0), None)
+    rows = end = 0
+    for k in range(stages.size()):
+        s = stages.apply(k)
+        end = max(end, s.stageId() + 1)
+        if s.stageId() < first:
+            continue
+        todo, names = [store.operationGraphForStage(s.stageId()).rootCluster()], set()
+        while todo:
+            c = todo.pop()
+            nodes, clusters = c.childNodes(), c.childClusters()
+            names.update(nodes.apply(i).name() for i in range(nodes.size()))
+            todo.extend(clusters.apply(i) for i in range(clusters.size()))
+        if "FileScanRDD" in names:
+            rows += s.inputRecords()
+    return rows, end
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

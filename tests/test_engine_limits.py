@@ -78,8 +78,9 @@ def test_rule_suite_end_to_end(spark):
 
 
 def test_rule_suite_summary_runs_the_row_kernel_once(spark):
-    """summary() derives "pass" from the rows summary it already holds:
-    one aggregate job over the row kernel, not a second one for pass."""
+    """summary() derives "pass" from the rows summary it already holds,
+    and the rows summary is observed on the one job that materializes the
+    result's evaluation; a repeated summary() runs no job."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     report = run_rule_suite(
         docs,
@@ -99,11 +100,65 @@ def test_rule_suite_summary_runs_the_row_kernel_once(spark):
 
     s, suite_jobs = jobs("suite-summary", report.summary)
     _, row_jobs = jobs("rows-summary", report.row_result.summary)
+    again, again_jobs = jobs("suite-summary-again", report.summary)
     assert s["pass"] is True and s["rows"]["n_rows"] == docs.count()
-    # one row-kernel aggregate (2 jobs with AQE: map stage + result);
-    # deriving "pass" from a second summary() made it 4
-    assert suite_jobs == row_jobs == 2, (suite_jobs, row_jobs)
-    assert report.passed is True
+    # one job over the row kernel (an aggregate was 2 with AQE: map stage
+    # + result; deriving "pass" from a second summary() made it 4)
+    assert suite_jobs == 1, suite_jobs
+    assert row_jobs == again_jobs == 0, (row_jobs, again_jobs)
+    assert again == s and report.passed is True
+
+
+def _within(seconds, fn):
+    """fn()'s result, or a test failure (not a hung session) after `seconds`."""
+    import threading
+
+    out = {}
+
+    def call():
+        try:
+            out["v"] = fn()
+        except BaseException as e:  # re-raised in the test's own thread
+            out["e"] = e
+
+    worker = threading.Thread(target=call, daemon=True)
+    worker.start()
+    worker.join(seconds)
+    assert not worker.is_alive(), f"no result after {seconds} s"
+    if "e" in out:
+        raise out["e"]
+    return out["v"]
+
+
+@pytest.mark.parametrize("case", ["passing", "empty", "failing"])
+def test_table_checks_count_on_the_job_that_computes_their_rows(spark, case):
+    """Each unique/referential count is observed on the job that computes
+    the check's rows, which the returned frames then read. A passing check
+    (its rows empty after a shuffle, which AQE propagates) and an empty
+    input table read 0 and do not wait forever on the observation."""
+    rows = [(i, i % 5) for i in range(40)]
+    if case == "failing":
+        rows += [(3, 7), (4, 9)]  # two duplicate ids, two orphan parents
+    df = spark.createDataFrame([] if case == "empty" else rows, "id long, p long")
+    parents = spark.createDataFrame([(i,) for i in range(5)], "p long")
+    report = _within(120, lambda: run_rule_suite(
+        df,
+        {"schema": {"properties": {"p": {"maximum": 4}}},
+         "unique": [{"keys": ["id"]}],
+         "referential": [{"child_key": "p", "parent": "parents", "parent_key": "p"}]},
+        tables={"parents": parents}, key_cols=["id"]))
+    counts = {c.kind: next(iter(c.details.values())) for c in report.table_checks}
+    n = 2 if case == "failing" else 0
+    assert counts == {"unique": n, "referential": n}
+    assert report.summary()["rows"]["n_rows"] == {"failing": 42, "passing": 40, "empty": 0}[case]
+    for bad in report.table_violations.values():
+        # the check's own rows: a scan of its blocks, no second aggregate
+        # or join
+        plan = bad._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan and "ExistingRDD" in plan, plan
+        assert bad.count() == n
+    assert len(report.table_violations) == (2 if case == "failing" else 0)
+
 
 def test_rule_suite_uniqueness_violation(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")

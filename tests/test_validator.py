@@ -258,3 +258,72 @@ def test_verdict_query_counts_py_fallback_rows(spark):
     total = df.select(F.sum(res._n_viols()).alias("n")).first()["n"]
     assert total == 1  # F.size("_jsp_violations") alone would report 0
 
+
+
+# =========================================================================
+# one evaluation per result: summary(), violations() and verdicts() read
+# one lazily checkpointed pass of the row kernel
+# =========================================================================
+def _pages(spark, path, n, bad_every):
+    """n rows in 4 parquet files; every `bad_every`-th lang breaks the enum."""
+    spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") % bad_every == 0, "xx").otherwise("en").alias("lang"),
+    ).repartition(4).write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+LANG_RULES = {"properties": {"lang": {"enum": ["en"]}}}
+
+
+def test_reports_read_the_input_once(spark, tmp_path):
+    """The three reports of one result scan the input files once between
+    them (three times when each re-ran the kernel)."""
+    from conftest import file_scan_rows
+
+    df = _pages(spark, str(tmp_path / "in"), 2000, 7)
+    assert len(df.inputFiles()) == 4
+    res = validate_dataframe(df, LANG_RULES, key_cols=["doc_id"])
+    _, first = file_scan_rows(spark)
+    s = res.summary()
+    viols = res.violations().collect()
+    verdicts = res.verdicts().collect()
+    scanned, _ = file_scan_rows(spark, first)
+    assert scanned == 2000, scanned
+    assert s == {"n_rows": 2000, "n_failed_rows": 286, "n_violations": 286, "pass": False}
+    assert sorted(r["doc_id"] for r in viols) == list(range(0, 2000, 7))
+    assert sum(r["n_rows"] for r in verdicts) == 2000
+    assert sum(r["n_failed_rows"] for r in verdicts) == 286
+    # the partition ids were taken before the checkpoint: one verdict row
+    # per partition of the validated frame
+    assert len(verdicts) == df.rdd.getNumPartitions()
+
+
+def test_strict_first_error_keeps_its_early_exit(spark, tmp_path):
+    """strict_first_error reads `annotated`: a limit over the lazy
+    evaluation would compute every partition before returning one row."""
+    from conftest import file_scan_rows
+
+    df = _pages(spark, str(tmp_path / "in"), 4000, 1)  # every row fails
+    res = validate_dataframe(df, LANG_RULES, key_cols=["doc_id"])
+    _, first = file_scan_rows(spark)
+    err = strict_first_error(res)
+    scanned, _ = file_scan_rows(spark, first)
+    assert err is not None and err["keyword"] == "enum"
+    assert scanned < 4000, scanned
+
+
+def test_results_over_a_rewritten_path_report_their_own_rows(spark, tmp_path):
+    """Two results over one path, its files rewritten in between: each
+    reports the rows it validated (a plan-keyed cache would hand the
+    second result the first one's rows, or the first the second's)."""
+    path = str(tmp_path / "in")
+    first = validate_dataframe(_pages(spark, path, 70, 7), LANG_RULES, key_cols=["doc_id"])
+    assert first.summary()["n_failed_rows"] == 10
+    assert first.violations().count() == 10
+    second = validate_dataframe(_pages(spark, path, 30, 3), LANG_RULES, key_cols=["doc_id"])
+    assert second.summary() == {"n_rows": 30, "n_failed_rows": 10,
+                                "n_violations": 10, "pass": False}
+    assert sorted(r["doc_id"] for r in second.violations().collect()) == list(range(0, 30, 3))
+    assert sorted(r["doc_id"] for r in first.violations().collect()) == list(range(0, 70, 7))
+    assert sum(r["n_rows"] for r in first.verdicts().collect()) == 70
