@@ -27,7 +27,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any, Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .errors import SchemaError
@@ -116,16 +116,6 @@ class RuleSuiteReport:
         return out
 
 
-def _materialized(bad: DataFrame) -> tuple[DataFrame, int]:
-    """`bad`'s rows, kept, and their count, both from the one job that
-    computes them: an eager localCheckpoint directly above the metrics
-    node, where AQE's empty-relation propagation cannot remove it (NOTES),
-    so a check with no offending rows reads 0."""
-    obs = Observation()
-    rows = bad.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-    return rows, obs.get["n"]
-
-
 def run_rule_suite(
     df: DataFrame,
     ruleset: dict | CompiledRuleSuite,
@@ -139,13 +129,15 @@ def run_rule_suite(
     row_result = None
     if suite.schema is not None:
         row_result = validate_dataframe(df, suite.schema, key_cols=key_cols)
+        row_result.evaluation()  # read by the summary and the row reports
 
     checks: list[TableCheck] = []
     violations: dict[str, DataFrame] = {}
 
     for u in suite.unique:
         cid = "unique:" + ",".join(u["keys"])
-        bad, n = _materialized(uniqueness_violations(df, u["keys"]))
+        bad = uniqueness_violations(df, u["keys"])
+        n = bad.count()
         checks.append(TableCheck("unique", cid, n == 0, {"n_duplicate_keys": n}))
         if n:
             violations[cid] = bad
@@ -155,8 +147,8 @@ def run_rule_suite(
         parent = tables.get(r["parent"])
         if parent is None:
             raise SchemaError(f'referential parent table "{r["parent"]}" not provided')
-        bad, n = _materialized(
-            referential_violations(df, r["child_key"], parent, r["parent_key"]))
+        bad = referential_violations(df, r["child_key"], parent, r["parent_key"])
+        n = bad.count()
         checks.append(TableCheck("referential", cid, n == 0, {"n_orphans": n}))
         if n:
             violations[cid] = bad

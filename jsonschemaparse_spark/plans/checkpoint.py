@@ -13,8 +13,9 @@ skips subdirectories: NOTES), then renames a manifest into
 data files added, the violations schema and the batches it supersedes.
 Readers read only live files, those of committed unsuperseded batches;
 any other `part-*` file is garbage, deleted at the start of a run and
-after its commit. A kill thus leaves the old state or the new one. A state dir from before the
-log is adopted, its reads filtered by snapshot_id.
+after its commit. A kill thus leaves the old state or the new one. A
+state dir from before the log is adopted, its reads filtered by
+snapshot_id.
 """
 
 from __future__ import annotations
@@ -176,7 +177,7 @@ class _Run:
         `supersede`), and return the verdicts (this snapshot's live
         metrics) and this batch's violations. Both writes read each
         result's one evaluation: the first materializes it, the second
-        reads its blocks."""
+        reads its blocks, and the blocks are freed after them."""
         snap = self.snapshot_id
         if not results:  # EMPTY, but with the real schema: appends of it stay valid
             return self.read("metrics", self.live, metrics_ddl), self.read(
@@ -195,11 +196,15 @@ class _Run:
                  "snapshot_id": snap, "inputs": inputs, "data": {},
                  "supersedes": [m["n"] for m in self.live] if supersede else [],
                  "schema": frames["violations"].schema.jsonValue()}
-        for store, frame in frames.items():
-            before = set(_part_files(self.state_dir, store))
-            frame.write.mode("append").parquet(os.path.join(self.state_dir, store))
-            batch["data"][store] = [
-                f for f in _part_files(self.state_dir, store) if f not in before]
+        try:
+            for store, frame in frames.items():
+                before = set(_part_files(self.state_dir, store))
+                frame.write.mode("append").parquet(os.path.join(self.state_dir, store))
+                batch["data"][store] = [
+                    f for f in _part_files(self.state_dir, store) if f not in before]
+        finally:
+            for res in results:
+                res.release()
         manifest = os.path.join(self.state_dir, _COMMITS, f"{batch['n']}.json")
         with open(manifest + ".tmp", "w") as fh:
             json.dump(batch, fh)

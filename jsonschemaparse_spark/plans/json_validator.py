@@ -34,6 +34,7 @@ from ..schema.relaxed_json import BigNumberError, loads_relaxed
 from ..schema.strict_json import loads_strict
 from .kernels import COMPACT_ARRAY, VIOLATION_ARRAY, ColumnCompiler, ExpressionFallback
 from .validator import (
+    FLAGGED_COL,
     PY_VIOLS_COL,
     VALID_COL,
     VIOLATIONS_COL,
@@ -41,6 +42,7 @@ from .validator import (
     _compiled,
     data_columns,
     document_record,
+    flagged_counts,
     key_columns,
 )
 
@@ -475,27 +477,25 @@ def validate_json_hybrid(
     from pyspark.sql import Observation
 
     obs = Observation()
-    mat = mat.observe(
-        obs, F.sum(needs_py.cast("long")).alias("jsp_flagged"),
-        F.count(F.lit(1)).alias("jsp_rows"),
-    )
+    mat = mat.observe(obs, *flagged_counts(needs_py))
     base = mat.select(
         *key_cols,
-        F.when(needs_py, F.lit(True)).otherwise(F.lit(False)).alias("_jsp_needs_py"),
+        F.when(needs_py, F.lit(True)).otherwise(F.lit(False)).alias(FLAGGED_COL),
         F.when(needs_py, F.array().cast(COMPACT_ARRAY))
         .otherwise(F.coalesce(cviols, F.array().cast(COMPACT_ARRAY)))
         .alias(VIOLATIONS_COL),
         F.coalesce(valid, F.lit(True)).alias("_jsp_expr_valid"),
         udf(F.when(needs_py, F.col(json_col))).alias("_jsp_py"),
     )
-    flag_cols = [F.col("_jsp_needs_py").alias(keep_flag_col)] if keep_flag_col else []
+    flag_cols = [F.col(FLAGGED_COL).alias(keep_flag_col)] if keep_flag_col else []
     annotated = base.select(
         *key_cols,
-        F.when(F.col("_jsp_needs_py"), F.col("_jsp_py").getField("valid"))
+        F.when(F.col(FLAGGED_COL), F.col("_jsp_py").getField("valid"))
         .otherwise(F.col("_jsp_expr_valid"))
         .alias(VALID_COL),
         F.col(VIOLATIONS_COL),
         F.col("_jsp_py").getField("v").alias(PY_VIOLS_COL),
+        F.col(FLAGGED_COL),  # the evaluation counts the flags again (NOTES)
         *flag_cols,
     )
     return ValidationResult(
@@ -657,6 +657,4 @@ def validate_json_positions(
         df, json_col, rules, key_cols=key_cols, extensions=extensions,
         positions=True,
     )
-    # the result's one report: a plan over `annotated`, not a checkpoint
-    # written and read once
-    return res._report(res.annotated)
+    return res.violations()

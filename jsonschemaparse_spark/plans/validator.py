@@ -37,6 +37,7 @@ PARTITION_COL = "_jsp_partition_id"
 
 # columns with this prefix are engine internals, never row properties
 INTERNAL_PREFIX = "_jsp_"
+FLAGGED_COL = "_jsp_needs_py"  # the hybrid JSON route: routed to the Python rescue
 
 
 def data_columns(df: DataFrame) -> list[str]:
@@ -77,6 +78,13 @@ def verdict_counts(n_viols: Column) -> list[Column]:
     ]
 
 
+def flagged_counts(flag: Column) -> list[Column]:
+    """The hybrid JSON route's observed metrics: rows routed to the Python
+    rescue, and all rows."""
+    return [F.sum(flag.cast("long")).alias("jsp_flagged"),
+            F.count(F.lit(1)).alias("jsp_rows")]
+
+
 def verdict_rollup(grouped: GroupedData, n_viols: Column, *extra: Column) -> DataFrame:
     """One verdict row per group: the counts, any `extra` aggregates,
     then pass = no failed row."""
@@ -97,9 +105,10 @@ class ValidationResult:
     - full (Arrow path): the 6-field structs are built in Python where
       codegen size is irrelevant.
 
-    summary(), violations(), verdicts() and annotations() read one
-    evaluation of `annotated` (see `evaluation()`), so the row kernel runs
-    once per result, whichever is called first.
+    After `evaluation()`, summary(), violations(), verdicts() and
+    annotations() read one evaluation of `annotated`, so the row kernel
+    runs once for all of them; without it each report is a plan over
+    `annotated` that stores nothing.
     """
 
     annotated: DataFrame  # input columns + _jsp_valid + _jsp_violations
@@ -118,32 +127,56 @@ class ValidationResult:
     # table's row count proves the corpus was fully JVM-validated —
     # checkpoint/resume reruns over the same data may then use
     # engine='typed' and skip the UDF stage (identical results by
-    # construction when nothing is flagged). Only an action over
-    # `annotated` itself fills it: building `evaluation()` fills it with
-    # zeros (an Observation below a lazy localCheckpoint, NOTES).
+    # construction when nothing is flagged). Once `evaluation()` is taken,
+    # this is an Observation over the evaluation instead, which its first
+    # full action fills.
     flagged_observation: Optional[object] = None
-    # (the `annotated` frame, its evaluation) and the summary of it
-    _evaluated: Optional[tuple] = field(default=None, init=False, repr=False)
+    # the evaluation, its checkpointed RDD, and the summary of it
+    _evaluation: Optional[DataFrame] = field(default=None, init=False, repr=False)
+    _blocks: Optional[object] = field(default=None, init=False, repr=False)
     _summary: Optional[dict] = field(default=None, init=False, repr=False)
 
+    def _rows(self) -> DataFrame:
+        """What the reports read of `annotated`: the key and `_jsp_`
+        columns plus each row's `spark_partition_id()`."""
+        cols = [c for c in self.annotated.columns
+                if c in self.key_cols or c.startswith(INTERNAL_PREFIX)]
+        return self.annotated.select(*cols, F.spark_partition_id().alias(PARTITION_COL))
+
+    def _frame(self) -> DataFrame:
+        """The evaluation if taken, else `_rows()` as a plan."""
+        return self._evaluation if self._evaluation is not None else self._rows()
+
     def evaluation(self) -> DataFrame:
-        """The one evaluation of `annotated` that every report reads: the
-        key and `_jsp_` columns plus each row's `spark_partition_id()`,
-        taken before the checkpoint so verdict rows keep the partitions of
-        `annotated`. A lazy localCheckpoint: the first action over it runs
-        the kernel and keeps the blocks, later ones read them. Not
-        persist(): the cache is keyed by plan, so a later result over the
-        same path (its files rewritten, or a timed rerun) would read these
-        rows. Rebuilt if `annotated` is replaced."""
-        if self._evaluated is None or self._evaluated[0] is not self.annotated:
-            cols = [c for c in self.annotated.columns
-                    if c in self.key_cols or c.startswith(INTERNAL_PREFIX)]
-            frame = self.annotated.select(
-                *cols, F.spark_partition_id().alias(PARTITION_COL))
-            if not frame.isStreaming:  # a stream's reports stay plans for writeStream
-                frame = frame.localCheckpoint(eager=False)
-            self._evaluated, self._summary = (self.annotated, frame), None
-        return self._evaluated[1]
+        """Take the one evaluation of `annotated` that every later report
+        reads, for callers that take more than one report (run_rule_suite,
+        the checkpoint runners, foreach_batch_sink, the CLI): `_rows()`
+        under a lazy localCheckpoint, the partition id taken before it so
+        verdict rows keep the partitions of `annotated`. The first action
+        over it runs the kernel and keeps the blocks, later ones read
+        them. It has no lineage, so a block lost with its executor fails
+        the reports that read it; `release()` frees the blocks, else they
+        live until the frame is garbage collected. Not persist(): a write
+        to the input's path recaches every cached plan that reads it, and
+        the result would then report rows it did not validate (NOTES)."""
+        if self._evaluation is None:
+            frame = self._rows().localCheckpoint(eager=False)
+            self._blocks = frame._jdf.queryExecution().analyzed().rdd()
+            if self.flagged_observation is not None:
+                # the checkpoint call filled the observation below it with
+                # zeros (NOTES): count the flags again above it
+                self.flagged_observation = Observation()
+                frame = frame.observe(self.flagged_observation,
+                                      *flagged_counts(F.col(FLAGGED_COL)))
+            self._evaluation = frame
+        return self._evaluation
+
+    def release(self) -> None:
+        """Free the evaluation's blocks. Frames built on it cannot be read
+        after this; later reports read `annotated` again."""
+        if self._blocks is not None:
+            self._blocks.unpersist(False)
+        self._evaluation = self._blocks = None
 
     def annotations(self) -> DataFrame:
         """(key..., constraint_id, keyword, value) — title/description
@@ -159,16 +192,16 @@ class ValidationResult:
             annotation_table(self.compiled) or [],
             "constraint_id string, keyword string, value string",
         )
-        passing = self.evaluation().filter(F.col(VALID_COL)).select(*self.key_cols)
+        passing = self._frame().filter(F.col(VALID_COL)).select(*self.key_cols)
         return passing.crossJoin(F.broadcast(static))
 
     def violations(self) -> DataFrame:
         """(key..., constraint_id, path, keyword, expected, actual, message)
         — the reference's errors[] sink as a DataFrame (error.js:21-37)."""
-        return self._report(self.evaluation())
+        return self._report(self._frame())
 
     def _report(self, frame: DataFrame) -> DataFrame:
-        """The violation rows of `frame` (the evaluation, or `annotated`).
+        """The violation rows of `frame` (`_frame()`, or `annotated`).
 
         Compact encoding: explode (tiny structs) then broadcast-join the
         rule table (hundreds of rows) to attach static metadata. Only
@@ -220,10 +253,9 @@ class ValidationResult:
         return n
 
     def verdicts(self) -> DataFrame:
-        """Per-partition pass/fail (north rule), grouped by the partition
-        id the evaluation recorded: the grouping key is the partition, so
-        AQE keeps this map-side."""
-        return verdict_rollup(self.evaluation().groupBy(PARTITION_COL), self._n_viols())
+        """Per-partition pass/fail (north rule). Partition-local agg: the
+        grouping key is spark_partition_id, so AQE keeps this map-side."""
+        return verdict_rollup(self._frame().groupBy(PARTITION_COL), self._n_viols())
 
     def observed(self, name: str = "jsp_metrics"):
         """Attach Spark observe() metrics so row/violation counts come back
@@ -235,13 +267,12 @@ class ValidationResult:
         return df, obs
 
     def summary(self) -> dict:
-        """Row totals, observed (above the checkpoint) on the one action
-        that materializes the evaluation, or reads it if another report
-        did; kept, so a repeated call runs no job."""
-        ev = self.evaluation()
+        """Row totals, observed on one action over the rows (the one that
+        materializes the evaluation, if taken and not yet read); kept, so
+        a repeated call runs no job."""
         if self._summary is None:
             obs = Observation()
-            ev.observe(obs, *verdict_counts(self._n_viols())) \
+            self._frame().observe(obs, *verdict_counts(self._n_viols())) \
                 .write.format("noop").mode("overwrite").save()
             row = obs.get
             failed = row["n_failed_rows"] or 0
@@ -419,7 +450,7 @@ def strict_first_error(result: ValidationResult):
     """``parse()``-style strict mode (parse.js:76-97): return the first
     violation if any. Catalyst CollectLimit early-exits the scan — the
     distributed analog of the reference's throw-on-first-error. It reads
-    `annotated`, not the evaluation: a limit over a lazy checkpoint not yet
+    `annotated`, not an evaluation: a limit over a lazy checkpoint not yet
     materialized computes every partition (NOTES)."""
     rows = result._report(result.annotated).limit(1).collect()
     return rows[0] if rows else None

@@ -152,12 +152,18 @@ def foreach_batch_sink(
 ):
     """Returns a foreachBatch function that runs the BATCH validation pass
     on every micro-batch and hands (violations_df, verdicts_df, batch_id)
-    to `on_batch` — single code path for batch and streaming."""
+    to `on_batch` — single code path for batch and streaming. Both frames
+    read the batch's one evaluation, freed when `on_batch` returns, so
+    they are readable only inside it (as the micro-batch itself is)."""
     from ..plans.validator import validate_dataframe
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         res = validate_dataframe(batch_df, rules, key_cols=key_cols, extensions=extensions)
-        on_batch(res.violations(), res.verdicts(), batch_id)
+        res.evaluation()
+        try:
+            on_batch(res.violations(), res.verdicts(), batch_id)
+        finally:
+            res.release()
 
     return _sink
 

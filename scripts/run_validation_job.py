@@ -106,6 +106,7 @@ def main() -> None:
             else:
                 res = validate_json_column(
                     df, args.json_col, suite.schema, key_cols=key_cols)
+                res.evaluation()  # one kernel pass for the three reports
                 res.violations().write.mode("overwrite").parquet(
                     f"{args.output}/violations")
                 res.verdicts().write.mode("overwrite").parquet(

@@ -46,6 +46,11 @@ def mutation_points(kill_at=None):
             setattr(owner, name, real)
 
 
+def stored_rdds(spark) -> set:
+    """The ids of the RDDs with blocks stored (cached or checkpointed)."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
 def file_scan_rows(spark, first: int = 0) -> tuple[int, int]:
     """(input rows of the stages numbered `first` and up that scan files,
     the number after the last stage), read from the in-process status

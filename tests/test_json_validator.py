@@ -239,6 +239,15 @@ def test_hybrid_flagged_observation(spark):
     m2 = res2.flagged_observation.get
     assert m2["jsp_flagged"] == 1 and m2["jsp_rows"] == 3  # only the corrupt row
 
+    # after evaluation(), the evaluation's first full action fills it
+    # (the checkpoint call fills the one below it with zeros)
+    res3 = validate_json_column(dirty, "props", rules, key_cols=["id"],
+                                engine="auto")
+    res3.evaluation()
+    assert res3.summary()["n_failed_rows"] == 2
+    m3 = res3.flagged_observation.get
+    assert m3["jsp_flagged"] == 1 and m3["jsp_rows"] == 3
+
 
 # =========================================================================
 # moved from test_round4_fixes.py (round-fix regression pins, split by

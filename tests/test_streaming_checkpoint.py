@@ -116,6 +116,9 @@ def test_foreach_batch_sink(spark, pages_dir):
         seen["violations"] = violations.count()
         seen["rows"] = sum(r["n_rows"] for r in verdicts.collect())
 
+    from conftest import stored_rdds
+
+    before = stored_rdds(spark)
     q = (
         stream.writeStream.foreachBatch(
             foreach_batch_sink(RULES, on_batch, key_cols=["url"])
@@ -126,6 +129,7 @@ def test_foreach_batch_sink(spark, pages_dir):
     q.awaitTermination(120)
     assert seen["rows"] == 3000
     assert seen["violations"] > 0
+    assert stored_rdds(spark) <= before  # each batch's evaluation was freed
 
 
 def test_streaming_dedup(spark, tmp_path_factory):
@@ -524,6 +528,36 @@ def _jobs_of(spark, group, fn):
     finally:
         sc.setJobGroup("", "")
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_checkpoint_runners_free_their_evaluation_blocks(spark, tmp_path,
+                                                         monkeypatch):
+    """Both state writes of a run read each result's checkpointed
+    evaluation, and the run frees its blocks once they are written."""
+    from jsonschemaparse_spark.plans.checkpoint import (
+        run_json_with_checkpoint,
+        run_with_checkpoint,
+    )
+    from jsonschemaparse_spark.plans.validator import ValidationResult
+
+    built = {}
+    evaluation = ValidationResult.evaluation
+
+    def recorded(self):
+        frame = evaluation(self)
+        built[self._blocks.id()] = self._blocks
+        return frame
+
+    monkeypatch.setattr(ValidationResult, "evaluation", recorded)
+    data = str(tmp_path / "in")
+    _three_files(spark, data)
+    run_with_checkpoint(spark, data, ROW_RULES, str(tmp_path / "row_state"),
+                        key_cols=["id"])
+    run_json_with_checkpoint(spark, data, "doc", JSON_RULES,
+                             str(tmp_path / "json_state"), key_cols=["id"])
+    assert len(built) == 2
+    kept = spark.sparkContext._jsc.sc().getPersistentRDDs()
+    assert not any(kept.contains(i) for i in built)
 
 
 def test_checkpoint_state_columns_and_cold_run_jobs(spark, tmp_path):

@@ -277,13 +277,14 @@ LANG_RULES = {"properties": {"lang": {"enum": ["en"]}}}
 
 
 def test_reports_read_the_input_once(spark, tmp_path):
-    """The three reports of one result scan the input files once between
-    them (three times when each re-ran the kernel)."""
+    """After evaluation(), the three reports of one result scan the input
+    files once between them (three times when each re-ran the kernel)."""
     from conftest import file_scan_rows
 
     df = _pages(spark, str(tmp_path / "in"), 2000, 7)
     assert len(df.inputFiles()) == 4
     res = validate_dataframe(df, LANG_RULES, key_cols=["doc_id"])
+    res.evaluation()
     _, first = file_scan_rows(spark)
     s = res.summary()
     viols = res.violations().collect()
@@ -299,6 +300,18 @@ def test_reports_read_the_input_once(spark, tmp_path):
     assert len(verdicts) == df.rdd.getNumPartitions()
 
 
+def test_a_single_report_stores_nothing(spark, tmp_path):
+    """Without evaluation(), a report is a plan over `annotated`: a caller
+    that takes one report keeps no copy of the rows."""
+    from conftest import stored_rdds
+
+    df = _pages(spark, str(tmp_path / "in"), 2000, 7)
+    before = stored_rdds(spark)
+    verdicts = validate_dataframe(df, LANG_RULES, key_cols=["doc_id"]).verdicts().collect()
+    assert sum(r["n_failed_rows"] for r in verdicts) == 286
+    assert stored_rdds(spark) <= before
+
+
 def test_strict_first_error_keeps_its_early_exit(spark, tmp_path):
     """strict_first_error reads `annotated`: a limit over the lazy
     evaluation would compute every partition before returning one row."""
@@ -306,6 +319,7 @@ def test_strict_first_error_keeps_its_early_exit(spark, tmp_path):
 
     df = _pages(spark, str(tmp_path / "in"), 4000, 1)  # every row fails
     res = validate_dataframe(df, LANG_RULES, key_cols=["doc_id"])
+    res.evaluation()
     _, first = file_scan_rows(spark)
     err = strict_first_error(res)
     scanned, _ = file_scan_rows(spark, first)
@@ -315,15 +329,48 @@ def test_strict_first_error_keeps_its_early_exit(spark, tmp_path):
 
 def test_results_over_a_rewritten_path_report_their_own_rows(spark, tmp_path):
     """Two results over one path, its files rewritten in between: each
-    reports the rows it validated (a plan-keyed cache would hand the
-    second result the first one's rows, or the first the second's)."""
+    reports the rows it validated (with persist(), the write recaches the
+    first result's plan and hands it the second one's rows)."""
     path = str(tmp_path / "in")
     first = validate_dataframe(_pages(spark, path, 70, 7), LANG_RULES, key_cols=["doc_id"])
+    first.evaluation()
     assert first.summary()["n_failed_rows"] == 10
     assert first.violations().count() == 10
     second = validate_dataframe(_pages(spark, path, 30, 3), LANG_RULES, key_cols=["doc_id"])
+    second.evaluation()
     assert second.summary() == {"n_rows": 30, "n_failed_rows": 10,
                                 "n_violations": 10, "pass": False}
     assert sorted(r["doc_id"] for r in second.violations().collect()) == list(range(0, 30, 3))
     assert sorted(r["doc_id"] for r in first.violations().collect()) == list(range(0, 70, 7))
     assert sum(r["n_rows"] for r in first.verdicts().collect()) == 70
+
+
+def test_release_frees_the_evaluation_blocks(spark, tmp_path):
+    """A result's reports share one checkpointed evaluation until
+    release() frees its blocks; later reports read `annotated` again."""
+    from conftest import stored_rdds
+
+    df = _pages(spark, str(tmp_path / "in"), 70, 7)
+    res = validate_dataframe(df, LANG_RULES, key_cols=["doc_id"])
+    res.evaluation()
+    before = stored_rdds(spark)
+    assert res.summary()["n_failed_rows"] == 10
+    kept = stored_rdds(spark) - before
+    assert kept == {res._blocks.id()}
+    res.release()
+    assert not kept & stored_rdds(spark)
+    assert res.violations().count() == 10
+    assert not kept & stored_rdds(spark)
+
+
+def test_streaming_result_reports_run_under_write_stream(spark, tmp_path):
+    """A streaming result's reports are plans that run under writeStream
+    (a stream cannot be checkpointed)."""
+    df = _pages(spark, str(tmp_path / "in"), 70, 7)
+    stream = spark.readStream.schema(df.schema).parquet(str(tmp_path / "in"))
+    res = validate_dataframe(stream, LANG_RULES, key_cols=["doc_id"])
+    q = (res.violations().writeStream.format("memory").queryName("stream_viols")
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = sorted(r["doc_id"] for r in spark.table("stream_viols").collect())
+    assert got == list(range(0, 70, 7))
