@@ -71,27 +71,52 @@ def empty_violations() -> Column:
     return F.array().cast(COMPACT_ARRAY)
 
 
-def _concat(pieces: list[Column]) -> Column:
-    pieces = [p for p in pieces if p is not None]
-    if not pieces:
-        return empty_violations()
-    if len(pieces) == 1:
-        return pieces[0]
-    return F.concat(*pieces)
+class _Node:
+    """The checks of one schema node: leaf checks become struct-or-null
+    pieces, subtrees add their (valid, violations) pair, and `done`
+    gathers the pieces and ANDs the validity columns in emission order."""
+
+    def __init__(self, cc: "ColumnCompiler", sid: str, path: Column):
+        self.cc, self.sid, self.path = cc, sid, path
+        self.spieces: list[Column] = []  # leaf struct-or-null pieces
+        self.pieces: list[Column] = []   # composite ARRAY pieces (subtrees)
+        self.valids: list[Column] = []
+
+    def leaf(self, cond_bad: Column, keyword: str, expected, actual: Column,
+             message: str, path: Optional[Column] = None,
+             exp: Optional[Column] = None) -> None:
+        rid = self.cc.register_rule(self.sid, keyword, expected, message)
+        self.spieces.append(self.cc.emit(
+            rid, cond_bad, self.path if path is None else path, actual, exp))
+        self.valids.append(~cond_bad)
+
+    def add(self, valid: Column, pieces: Column) -> None:
+        self.valids.append(valid)
+        self.pieces.append(pieces)
+
+    def done(self) -> Tuple[Column, Column]:
+        """Leaf pieces gather into one array_compact, concatenated with the
+        subtree arrays. NOTE: leaf checks of a node order before its
+        subtree pieces — intra-row violation ORDER is unspecified and has
+        never been a cross-engine contract (the Python evaluator's emission
+        order differs from the Column path's anyway); consumers must match
+        on content, as the report-parity suites do."""
+        arrays = [F.array_compact(F.array(*self.spieces))] if self.spieces else []
+        arrays += self.pieces
+        if not arrays:
+            viols = empty_violations()
+        else:
+            viols = arrays[0] if len(arrays) == 1 else F.concat(*arrays)
+        valid = self.valids[0] if self.valids else F.lit(True)
+        for v in self.valids[1:]:
+            valid = valid & v
+        return valid, viols
 
 
-def _gather(spieces: list[Column], apieces: list[Column]) -> Column:
-    """Combine leaf struct-or-null pieces (one array_compact) with
-    composite array pieces (concat). NOTE: leaf checks of a node order
-    before its subtree pieces — intra-row violation ORDER is unspecified
-    and has never been a cross-engine contract (the Python evaluator's
-    emission order differs from the Column path's anyway); consumers must
-    match on content, as the report-parity suites do."""
-    arrays: list[Column] = []
-    if spieces:
-        arrays.append(F.array_compact(F.array(*spieces)))
-    arrays.extend(apieces)
-    return _concat(arrays)
+def _in_place(cs: CompiledSchema) -> list[CompiledSchema]:
+    """The in-place applicators that always apply: allOf members and a
+    resolved $ref."""
+    return list(cs.all_of) + ([cs.resolve_ref()] if cs.ref is not None else [])
 
 
 def spark_json_type(dtype: T.DataType) -> Optional[str]:
@@ -231,7 +256,7 @@ class ColumnCompiler:
         into ONE array_compact(array(...)) per schema node instead of a
         concat of N single-element arrays — fewer allocations, smaller
         codegen. Same array CONTENTS; intra-row order is unspecified
-        (see _gather). `exp` optionally overrides the rule table's static
+        (see _Node.done). `exp` optionally overrides the rule table's static
         expected with a per-row dynamic value."""
         v = F.struct(
             F.lit(rule_id).alias("rule_id"),
@@ -277,15 +302,8 @@ class ColumnCompiler:
         depth: int,
     ) -> Tuple[Column, Column]:
         jtype = spark_json_type(dtype)
-        pieces: list[Column] = []   # composite ARRAY pieces (subtrees)
-        spieces: list[Column] = []  # leaf struct-or-null pieces
-        valids: list[Column] = []
-        sid = cs.id
-
-        def leaf(cond_bad: Column, keyword: str, expected, actual: Column, message: str) -> None:
-            rid = self.register_rule(sid, keyword, expected, message)
-            spieces.append(self.emit(rid, cond_bad, path, actual))
-            valids.append(~cond_bad)
+        node = _Node(self, cs.id, path)
+        leaf = node.leaf
 
         # ---- type / const-type start checks --------------------------------
         if jtype is not None:
@@ -312,31 +330,23 @@ class ColumnCompiler:
 
         # ---- per-type keyword kernels --------------------------------------
         if jtype in ("integer", "number"):
-            self._number_kernels(cs, col, dtype, path, leaf)
+            self._number_kernels(cs, col, dtype, leaf)
         elif jtype == "string":
             scol = col.cast("string") if not isinstance(dtype, T.StringType) else col
-            self._string_kernels(cs, scol, path, leaf)
+            self._string_kernels(cs, scol, leaf)
         elif jtype == "boolean":
-            self._boolean_kernels(cs, col, path, leaf)
+            self._boolean_kernels(cs, col, leaf)
         elif jtype == "array":
-            v2, p2 = self._array_kernels(cs, col, dtype, path, depth)
-            valids.append(v2)
-            pieces.append(p2)
+            node.add(*self._array_kernels(cs, col, dtype, path, depth))
         elif jtype == "object":
-            v2, p2 = self._object_kernels(cs, col, dtype, path, depth)
-            valids.append(v2)
-            pieces.append(p2)
+            node.add(*self._object_kernels(cs, col, dtype, path, depth))
 
         # ---- combinators -----------------------------------------------------
         for sub in cs.all_of:
-            v2, p2 = self.compile_value(sub, col, dtype, path, depth + 1)
-            valids.append(v2)
-            pieces.append(p2)
+            node.add(*self.compile_value(sub, col, dtype, path, depth + 1))
 
         if cs.ref is not None:
-            v2, p2 = self.compile_value(cs.resolve_ref(), col, dtype, path, depth + 1)
-            valids.append(v2)
-            pieces.append(p2)
+            node.add(*self.compile_value(cs.resolve_ref(), col, dtype, path, depth + 1))
 
         if cs.recursive_ref is not None:
             # static unrolling against the concrete column type: recursion
@@ -348,11 +358,9 @@ class ColumnCompiler:
                 if self._recursive_base is not None
                 else cs.registry.lookup(cs.recursive_ref)
             )
-            v2, p2 = self.compile_value(target, col, dtype, path, depth + 1)
-            valids.append(v2)
-            pieces.append(p2)
+            node.add(*self.compile_value(target, col, dtype, path, depth + 1))
 
-        if getattr(cs, "has_any_of", bool(cs.any_of)):
+        if cs.has_any_of:
             branch_valids = [
                 self.valid_only(s, col, dtype, path, depth + 1) for s in cs.any_of
             ] or [F.lit(False)]  # empty anyOf is unsatisfiable (schema.js:1387-1393)
@@ -362,7 +370,7 @@ class ColumnCompiler:
             leaf(~any_ok, "anyOf", 1, F.lit(0),
                  'Expected "anyOf" to have at least one matching schema')
 
-        if getattr(cs, "has_one_of", bool(cs.one_of)):
+        if cs.has_one_of:
             branch_valids = [
                 self.valid_only(s, col, dtype, path, depth + 1) for s in cs.one_of
             ] or [F.lit(False)]  # empty oneOf: 0 valid branches != 1
@@ -388,11 +396,10 @@ class ColumnCompiler:
                 if cs.else_ is not None
                 else (F.lit(True), empty_violations())
             )
-            valids.append(F.when(iv, tv).otherwise(ev))
-            pieces.append(F.when(iv, tp).otherwise(ep))
+            node.add(F.when(iv, tv).otherwise(ev), F.when(iv, tp).otherwise(ep))
 
         # ---- enum / const / format -------------------------------------------
-        self._enum_const_kernels(cs, col, dtype, jtype, path, leaf, depth)
+        self._enum_const_kernels(cs, col, dtype, jtype, leaf)
 
         # structural enum members: pass if >= 1 const-subschema matches
         # (EndObject/EndArray testEnum, schema.js:813-820, 851-858)
@@ -411,17 +418,14 @@ class ColumnCompiler:
             leaf(F.lit(True), "enum", 1, F.lit(0),
                  'Expected "enum" to have one matching value')
 
-        viols = _gather(spieces, pieces)
-        valid = valids[0] if valids else F.lit(True)
-        for v in valids[1:]:
-            valid = valid & v
+        valid, viols = node.done()
         # NULL value => vacuous pass (parent handles presence)
         valid = F.when(col.isNull(), F.lit(True)).otherwise(valid)
         viols = F.when(col.isNull(), empty_violations()).otherwise(viols)
         return valid, viols
 
     # ------------------------------------------------------------------
-    def _number_kernels(self, cs: CompiledSchema, col: Column, dtype, path, leaf) -> None:
+    def _number_kernels(self, cs: CompiledSchema, col: Column, dtype, leaf) -> None:
         # bigNumber 'error': a long/decimal value that cannot round-trip
         # through binary64 emits the reference's validation row
         # (parse.js:1180-1186 badCase -> ResourceLimitError "Number too
@@ -486,7 +490,7 @@ class ColumnCompiler:
             bad = (col.cast("double") / F.lit(float(cs.multiple_of))) % F.lit(1.0) != F.lit(0.0)
             leaf(bad, "multipleOf", cs.multiple_of, col, "Number not multiple of")
 
-    def _string_kernels(self, cs: CompiledSchema, col: Column, path, leaf) -> None:
+    def _string_kernels(self, cs: CompiledSchema, col: Column, leaf) -> None:
         # F.length counts code points — matches reference surrogate handling
         # (parse.js:1232-1233,1256; SURVEY.md §4.3-2)
         if cs.min_length is not None:
@@ -503,13 +507,13 @@ class ColumnCompiler:
             leaf(~col.rlike(rlike_pattern(cs.pattern)), "pattern", cs.pattern, col,
                  "String does not match /" + cs.pattern + "/")
 
-    def _boolean_kernels(self, cs: CompiledSchema, col: Column, path, leaf) -> None:
+    def _boolean_kernels(self, cs: CompiledSchema, col: Column, leaf) -> None:
         if cs.const_type == "boolean":
             leaf(col != F.lit(bool(cs.const_value)), "const", cs.const_value,
                  col, "const mismatch")
 
     # ------------------------------------------------------------------
-    def _enum_const_kernels(self, cs, col, dtype, jtype, path, leaf, depth) -> None:
+    def _enum_const_kernels(self, cs, col, dtype, jtype, leaf) -> None:
         if (
             self.enforce_formats
             and cs.format is not None
@@ -541,9 +545,9 @@ class ColumnCompiler:
                 test_col = col
             if lits:
                 # Catalyst OptimizeIn turns this into an InSet hash probe
-                leaf(~test_col.isin(lits), "enum", getattr(cs, "enum_scalars", cs.enum_values), col, msg)
+                leaf(~test_col.isin(lits), "enum", cs.enum_scalars, col, msg)
             else:
-                leaf(F.lit(True), "enum", getattr(cs, "enum_scalars", None), col, msg)
+                leaf(F.lit(True), "enum", cs.enum_scalars, col, msg)
 
         if cs.const_type is not None:
             if cs.const_type == "string" and jtype == "string":
@@ -575,103 +579,77 @@ class ColumnCompiler:
 
     # ------------------------------------------------------------------
     def _array_kernels(self, cs, col: Column, dtype: T.ArrayType, path, depth):
-        pieces: list[Column] = []
-        spieces: list[Column] = []
-        valids: list[Column] = []
-        sid = cs.id
-
-        def leaf(cond_bad, keyword, expected, actual, message):
-            rid = self.register_rule(sid, keyword, expected, message)
-            spieces.append(self.emit(rid, cond_bad, path, actual))
-            valids.append(~cond_bad)
-
+        node = _Node(self, cs.id, path)
         n = F.size(col)
         if cs.min_items is not None:
-            leaf(n < F.lit(int(cs.min_items)), "minItems", cs.min_items, n, "Too few items")
+            node.leaf(n < F.lit(int(cs.min_items)), "minItems", cs.min_items, n, "Too few items")
         if cs.max_items is not None:
-            leaf(n > F.lit(int(cs.max_items)), "maxItems", cs.max_items, n, "Too many items")
+            node.leaf(n > F.lit(int(cs.max_items)), "maxItems", cs.max_items, n, "Too many items")
         if cs.const_length is not None:  # any const type incl. string length (schema.js:833-838)
-            leaf(n != F.lit(int(cs.const_length)), "const", cs.const_length, n,
-                 "Incorrect number of items")
+            node.leaf(n != F.lit(int(cs.const_length)), "const", cs.const_length, n,
+                      "Incorrect number of items")
 
         elem_type = dtype.elementType
 
         if cs.items_all is not None:
-            sub = cs.items_all
-
-            def _elem(x, i):
-                # compile ONCE per element subschema: both struct fields bind
-                # the same (ok, v) pair — halves the codegen tree and avoids
-                # duplicate rule_table registration (VERDICT r1 fix #3)
-                ipath = F.concat(path.cast("string"), F.lit("/"), i.cast("string"))
-                ok, v = self.compile_value(sub, x, elem_type, ipath, depth + 1)
-                return F.struct(ok.alias("ok"), v.alias("v"))
-
-            per_elem = F.transform(col, _elem)
-            valids.append(F.forall(per_elem, lambda s: s["ok"]))
-            pieces.append(F.flatten(F.transform(per_elem, lambda s: s["v"])))
+            node.add(*self._each(col, cs.items_all, elem_type, path, depth))
         elif cs.items_tuple is not None:
             for idx, sub in enumerate(cs.items_tuple):
                 ipath = F.concat(path.cast("string"), F.lit(f"/{idx}"))
                 item = F.when(n > idx, F.element_at(col, idx + 1))
-                v2, p2 = self.compile_value(sub, item, elem_type, ipath, depth + 1)
-                valids.append(v2)
-                pieces.append(p2)
+                node.add(*self.compile_value(sub, item, elem_type, ipath, depth + 1))
             if cs.additional_items is not None:
-                sub = cs.additional_items
                 start = len(cs.items_tuple)
                 rest = F.slice(col, start + 1, F.greatest(n - start, F.lit(0)))
-
-                def _extra(x, i):
-                    # single compile per extra element (VERDICT r1 fix #3)
-                    ipath = F.concat(path.cast("string"), F.lit("/"),
-                                     (i + start).cast("string"))
-                    ok, v = self.compile_value(sub, x, elem_type, ipath, depth + 1)
-                    return F.struct(ok.alias("ok"), v.alias("v"))
-
-                per_elem = F.transform(rest, _extra)
-                valids.append(F.forall(per_elem, lambda s: s["ok"]))
-                pieces.append(F.flatten(F.transform(per_elem, lambda s: s["v"])))
+                node.add(*self._each(rest, cs.additional_items, elem_type, path, depth,
+                                     start=start))
 
         if self.extensions and cs.contains is not None:
             sub = cs.contains
             hits = F.size(F.filter(col, lambda x: self.valid_only(
                 sub, x, elem_type, path, depth + 1)))
             lo = int(cs.min_contains) if cs.min_contains is not None else 1
-            leaf(hits < F.lit(lo), "contains", lo, hits,
-                 'Expected "contains" to match at least one item')
+            node.leaf(hits < F.lit(lo), "contains", lo, hits,
+                      'Expected "contains" to match at least one item')
             if cs.max_contains is not None:
-                leaf(hits > F.lit(int(cs.max_contains)), "maxContains",
-                     cs.max_contains, hits,
-                     'Expected "contains" to match at most maxContains items')
+                node.leaf(hits > F.lit(int(cs.max_contains)), "maxContains",
+                          cs.max_contains, hits,
+                          'Expected "contains" to match at most maxContains items')
 
         if self.extensions and cs.unique_items:
-            leaf(F.size(F.array_distinct(col)) != n, "uniqueItems", True, n,
-                 "Array items are not unique")
+            node.leaf(F.size(F.array_distinct(col)) != n, "uniqueItems", True, n,
+                      "Array items are not unique")
 
         if self.extensions and cs.unevaluated_items is not None:
             prefix = self._items_prefix_col(cs, col, dtype, path, depth)
             if prefix is not None:  # None => everything evaluated statically
-                usub = cs.unevaluated_items
+                node.add(*self._each(col, cs.unevaluated_items, elem_type, path, depth,
+                                     prefix=prefix))
 
-                def _uneval(x, i):
-                    ipath = F.concat(path.cast("string"), F.lit("/"), i.cast("string"))
-                    ok, v = self.compile_value(usub, x, elem_type, ipath, depth + 1)
-                    guard = i >= prefix
-                    return F.struct(
-                        F.when(guard, ok).otherwise(F.lit(True)).alias("ok"),
-                        F.when(guard, v).otherwise(empty_violations()).alias("v"),
-                    )
+        return node.done()
 
-                per_elem = F.transform(col, _uneval)
-                valids.append(F.forall(per_elem, lambda s: s["ok"]))
-                pieces.append(F.flatten(F.transform(per_elem, lambda s: s["v"])))
+    def _each(self, arr: Column, sub: CompiledSchema, elem_type: T.DataType, path,
+              depth: int, start: Optional[int] = None,
+              prefix: Optional[Column] = None) -> Tuple[Column, Column]:
+        """(valid, violations) of `sub` over every element of `arr`: items,
+        additionalItems (`start` = the index of the first element) and
+        unevaluatedItems (elements below `prefix` pass). `sub` compiles ONCE
+        per element: both struct fields bind the same (ok, v) pair — halves
+        the codegen tree and avoids duplicate rule_table registration
+        (VERDICT r1 fix #3)."""
+        def _elem(x, i):
+            idx = i if start is None else i + start
+            ipath = F.concat(path.cast("string"), F.lit("/"), idx.cast("string"))
+            ok, v = self.compile_value(sub, x, elem_type, ipath, depth + 1)
+            if prefix is not None:
+                guard = i >= prefix
+                ok = F.when(guard, ok).otherwise(F.lit(True))
+                v = F.when(guard, v).otherwise(empty_violations())
+            return F.struct(ok.alias("ok"), v.alias("v"))
 
-        viols = _gather(spieces, pieces)
-        valid = valids[0] if valids else F.lit(True)
-        for v in valids[1:]:
-            valid = valid & v
-        return valid, viols
+        per_elem = F.transform(arr, _elem)
+        return (F.forall(per_elem, lambda s: s["ok"]),
+                F.flatten(F.transform(per_elem, lambda s: s["v"])))
 
     def _items_prefix_col(
         self, cs: CompiledSchema, col: Column, dtype: T.DataType, path, depth: int
@@ -687,10 +665,7 @@ class ColumnCompiler:
         ):
             return None
         p: Column = F.lit(len(cs.items_tuple) if cs.items_tuple is not None else 0)
-        subs = list(cs.all_of)
-        if cs.ref is not None:
-            subs.append(cs.resolve_ref())
-        for s in subs:
+        for s in _in_place(cs):
             sp = self._items_prefix_col(s, col, dtype, path, depth + 1)
             if sp is None:
                 return None  # an unconditional applicator evaluates all
@@ -727,10 +702,7 @@ class ColumnCompiler:
             return True
         if cs.additional_properties is not None:
             return True
-        subs = list(cs.all_of)
-        if cs.ref is not None:
-            subs.append(cs.resolve_ref())
-        return any(self._statically_evaluated(s, name, depth + 1) for s in subs)
+        return any(self._statically_evaluated(s, name, depth + 1) for s in _in_place(cs))
 
     def _branch_valid(self, s: CompiledSchema, col: Column, dtype: T.DataType,
                       path, depth: int, cache: dict) -> Column:
@@ -798,10 +770,7 @@ class ColumnCompiler:
                 if else_cov is not None:
                     ev = self._branch_valid(cs.else_, col, dtype, path, depth + 1, cache)
                     conds.append(gated((~iv) & ev, else_cov))
-        subs = list(cs.all_of)
-        if cs.ref is not None:
-            subs.append(cs.resolve_ref())
-        for s in subs:
+        for s in _in_place(cs):
             c = self._conditionally_evaluated(s, nm, col, dtype, path, depth + 1, cache)
             if c is not None:
                 conds.append(c)
@@ -816,85 +785,32 @@ class ColumnCompiler:
     def _object_kernels(self, cs, col: Column, dtype: T.DataType, path, depth):
         """Struct columns: static key routing (properties -> fields).
         Map columns: dynamic keys via map HOFs (scalar subschemas only)."""
-        pieces: list[Column] = []
-        spieces: list[Column] = []
-        valids: list[Column] = []
-        sid = cs.id
-
-        def leaf(cond_bad, keyword, expected, actual, message):
-            rid = self.register_rule(sid, keyword, expected, message)
-            spieces.append(self.emit(rid, cond_bad, path, actual))
-            valids.append(~cond_bad)
-
-        def leaf_at(fpath, cond_bad, keyword, expected, actual, message):
-            rid = self.register_rule(sid, keyword, expected, message)
-            spieces.append(self.emit(rid, cond_bad, fpath, actual))
-            valids.append(~cond_bad)
-
+        node = _Node(self, cs.id, path)
         if isinstance(dtype, T.StructType):
             names = [f.name for f in dtype.fields]
             types = {f.name: f.dataType for f in dtype.fields}
-            present = [F.when(col.getField(nm).isNotNull(), 1).otherwise(0) for nm in names]
-            n_present = sum(present[1:], present[0]) if present else F.lit(0)
-            if cs.min_properties is not None:
-                leaf(n_present < F.lit(int(cs.min_properties)), "minProperties",
-                     cs.min_properties, n_present, "Too few properties")
-            if cs.max_properties is not None:
-                leaf(n_present > F.lit(int(cs.max_properties)), "maxProperties",
-                     cs.max_properties, n_present, "Too many properties")
-            if cs.const_length is not None:
-                # any const type incl. string length (schema.js:798-803)
-                leaf(n_present != F.lit(int(cs.const_length)), "const",
-                     cs.const_length, n_present, "Incorrect number of properties")
-            if cs.required:
-                # the reference emits BOTH rows per object (r3): the
-                # endObject count check (schema.js:810) and the
-                # finish()-time missing-key list in declaration order
-                # (schema.js:1322-1324) — the list rides the dynamic-
-                # expected slot of the compact encoding
-                miss_flags = [
-                    (col.getField(k).isNull() if k in types else F.lit(True))
-                    for k in cs.required
-                ]
-                miss = [F.when(f, 1).otherwise(0) for f in miss_flags]
-                n_missing = miss[0]
-                for m in miss[1:]:
-                    n_missing = n_missing + m
-                leaf(n_missing > F.lit(0), "required", 0, n_missing,
-                     "Required property missing")
-                # json.dumps-style per-key literals (escaped at compile
-                # time — keys are static), so the report string is byte-
-                # identical to the evaluator's _show(json.dumps) form
-                miss_list = F.concat(
-                    F.lit("["),
-                    F.concat_ws(", ", F.array_compact(F.array(*[
-                        F.when(f, F.lit(json.dumps(k, ensure_ascii=False)))
-                        for f, k in zip(miss_flags, cs.required)
-                    ]))),
-                    F.lit("]"),
-                )
-                rid2 = self.register_rule(sid, "required", None,
-                                          "Required properties missing")
-                spieces.append(self.emit(rid2, n_missing > F.lit(0), path,
-                                         F.lit(None), exp=miss_list))
-                valids.append(~(n_missing > F.lit(0)))
+
+            def n_present() -> Column:
+                present = [F.when(col.getField(nm).isNotNull(), 1).otherwise(0) for nm in names]
+                return sum(present[1:], present[0]) if present else F.lit(0)
+
+            def has(k: str) -> Column:
+                return col.getField(k).isNotNull() if k in types else F.lit(False)
+
+            def missing(k: str) -> Column:
+                return col.getField(k).isNull() if k in types else F.lit(True)
+
+            self._object_keywords(node, cs, n_present, has, missing, missing)
             # const objects: NO missing-key leaf — the reference's
             # constRemain branch (schema.js:1360, "FIXME") is dead code, so
             # only constLength + per-present-key equality apply (absent
             # const keys validate vacuously via the routed subschemas)
-            if self.extensions and cs.dependent_required:
-                for k, reqs in sorted(cs.dependent_required.items()):
-                    present_k = col.getField(k).isNotNull() if k in types else F.lit(False)
-                    for r in reqs:
-                        r_missing = col.getField(r).isNull() if r in types else F.lit(True)
-                        leaf(present_k & r_missing, "dependentRequired", 0, F.lit(1),
-                             "Dependent property missing")
             if self.extensions and cs.dependent_schemas:
                 for k, dsub in sorted(cs.dependent_schemas.items()):
-                    present_k = col.getField(k).isNotNull() if k in types else F.lit(False)
+                    present_k = has(k)
                     dv, dp = self.compile_value(dsub, col, dtype, path, depth + 1)
-                    valids.append(F.when(present_k, dv).otherwise(F.lit(True)))
-                    pieces.append(F.when(present_k, dp).otherwise(empty_violations()))
+                    node.add(F.when(present_k, dv).otherwise(F.lit(True)),
+                             F.when(present_k, dp).otherwise(empty_violations()))
             # route fields (projection analog of initProperty, schema.js:1195-1224)
             _cond_cache: dict = {}  # branch validity shared across fields
             for nm in names:
@@ -924,21 +840,15 @@ class ColumnCompiler:
                     if dyn is not None:
                         uv = F.when(dyn, F.lit(True)).otherwise(uv)
                         up = F.when(dyn, empty_violations()).otherwise(up)
-                    valids.append(uv)
-                    pieces.append(up)
+                    node.add(uv, up)
                 for sub in routed_subs:
-                    if self.collect_field_fallbacks and depth == 0:
-                        try:
-                            v2, p2 = self.compile_value(
-                                sub, col.getField(nm), types[nm], fpath, depth + 1)
-                        except ExpressionFallback:
-                            self.field_fallbacks.append((nm, sub))
-                            continue
-                    else:
-                        v2, p2 = self.compile_value(
-                            sub, col.getField(nm), types[nm], fpath, depth + 1)
-                    valids.append(v2)
-                    pieces.append(p2)
+                    try:
+                        node.add(*self.compile_value(
+                            sub, col.getField(nm), types[nm], fpath, depth + 1))
+                    except ExpressionFallback:
+                        if not (self.collect_field_fallbacks and depth == 0):
+                            raise
+                        self.field_fallbacks.append((nm, sub))
                 if self.extensions and cs.property_names is not None:
                     # field names are compile-time constants: evaluate the
                     # name subschema NOW; emit a static violation only for
@@ -947,70 +857,30 @@ class ColumnCompiler:
 
                     name_errors, _ = _PyEval(extensions=True).validate(cs.property_names, nm)
                     if name_errors:
-                        leaf_at(fpath, col.getField(nm).isNotNull(), "propertyNames",
-                                None, F.lit(nm), "propertyNames mismatch")
+                        node.leaf(col.getField(nm).isNotNull(), "propertyNames", None,
+                                  F.lit(nm), "propertyNames mismatch", path=fpath)
         elif isinstance(dtype, T.MapType):
             if not isinstance(dtype.keyType, T.StringType):
                 raise ExpressionFallback("map keys must be strings for object semantics")
             keys = F.map_keys(col)
-            n = F.size(keys)
-            if cs.min_properties is not None:
-                leaf(n < F.lit(int(cs.min_properties)), "minProperties",
-                     cs.min_properties, n, "Too few properties")
-            if cs.max_properties is not None:
-                leaf(n > F.lit(int(cs.max_properties)), "maxProperties",
-                     cs.max_properties, n, "Too many properties")
-            if cs.const_length is not None:
-                leaf(n != F.lit(int(cs.const_length)), "const",
-                     cs.const_length, n, "Incorrect number of properties")
-            if cs.required:
-                # both reference rows, as in the struct path above
-                miss_flags = [~F.coalesce(F.array_contains(keys, k), F.lit(False))
-                              for k in cs.required]
-                miss = [F.when(f, 1).otherwise(0) for f in miss_flags]
-                n_missing = miss[0]
-                for m in miss[1:]:
-                    n_missing = n_missing + m
-                leaf(n_missing > F.lit(0), "required", 0, n_missing,
-                     "Required property missing")
-                # json.dumps-style per-key literals (escaped at compile
-                # time — keys are static), so the report string is byte-
-                # identical to the evaluator's _show(json.dumps) form
-                miss_list = F.concat(
-                    F.lit("["),
-                    F.concat_ws(", ", F.array_compact(F.array(*[
-                        F.when(f, F.lit(json.dumps(k, ensure_ascii=False)))
-                        for f, k in zip(miss_flags, cs.required)
-                    ]))),
-                    F.lit("]"),
-                )
-                rid2 = self.register_rule(sid, "required", None,
-                                          "Required properties missing")
-                spieces.append(self.emit(rid2, n_missing > F.lit(0), path,
-                                         F.lit(None), exp=miss_list))
-                valids.append(~(n_missing > F.lit(0)))
-            if self.extensions and cs.dependent_required:
-                for k, reqs in sorted(cs.dependent_required.items()):
-                    present_k = F.array_contains(keys, k)
-                    for r in reqs:
-                        leaf(present_k & ~F.array_contains(keys, r), "dependentRequired",
-                             0, F.lit(1), "Dependent property missing")
+            # `required` keeps its own NULL-safe form of the key test
+            self._object_keywords(
+                node, cs, lambda: F.size(keys),
+                lambda k: F.array_contains(keys, k),
+                lambda k: ~F.array_contains(keys, k),
+                lambda k: ~F.coalesce(F.array_contains(keys, k), F.lit(False)))
             vtype = dtype.valueType
             for key, sub in cs.properties.items():
                 fpath = F.concat(path.cast("string"), F.lit("/" + key))
-                v2, p2 = self.compile_value(
-                    sub, F.element_at(col, F.lit(key)), vtype, fpath, depth + 1)
-                valids.append(v2)
-                pieces.append(p2)
+                node.add(*self.compile_value(
+                    sub, F.element_at(col, F.lit(key)), vtype, fpath, depth + 1))
             if cs.const_properties is not None:
                 # no missing-key leaf: reference constRemain is dead code
                 # (schema.js:1360) — absent keys validate vacuously
                 for key, csub in sorted(cs.const_properties.items()):
                     fpath = F.concat(path.cast("string"), F.lit("/" + key))
-                    v2, p2 = self.compile_value(
-                        csub, F.element_at(col, F.lit(key)), vtype, fpath, depth + 1)
-                    valids.append(v2)
-                    pieces.append(p2)
+                    node.add(*self.compile_value(
+                        csub, F.element_at(col, F.lit(key)), vtype, fpath, depth + 1))
             for pat, rx, psub in cs.pattern_properties:
                 if not rlike_safe(pat):
                     raise ExpressionFallback(f"ECMAScript-only key regex {pat!r}")
@@ -1019,8 +889,8 @@ class ColumnCompiler:
                     F.map_filter(col, lambda k, v: k.rlike(jpat)))
                 per_elem = F.transform(matched_vals, lambda x: self.valid_only(
                     psub, x, vtype, path, depth + 1))
-                leaf(~F.forall(per_elem, lambda ok: ok), "patternProperties",
-                     pat, F.lit(None), "patternProperties mismatch")
+                node.leaf(~F.forall(per_elem, lambda ok: ok), "patternProperties",
+                          pat, F.lit(None), "patternProperties mismatch")
             if cs.additional_properties is not None:
                 known = list(cs.properties.keys())
                 apsub = cs.additional_properties
@@ -1034,19 +904,66 @@ class ColumnCompiler:
                 extra_vals = F.map_values(F.map_filter(col, lambda k, v: is_additional(k)))
                 per_elem = F.transform(extra_vals, lambda x: self.valid_only(
                     apsub, x, vtype, path, depth + 1))
-                leaf(~F.forall(per_elem, lambda ok: ok), "additionalProperties",
-                     None, F.lit(None), "additionalProperties mismatch")
+                node.leaf(~F.forall(per_elem, lambda ok: ok), "additionalProperties",
+                          None, F.lit(None), "additionalProperties mismatch")
             if self.extensions and cs.property_names is not None:
                 pn = cs.property_names
                 per_key = F.transform(keys, lambda k: self.valid_only(
                     pn, k, T.StringType(), path, depth + 1))
-                leaf(~F.forall(per_key, lambda ok: ok), "propertyNames",
-                     None, F.lit(None), "propertyNames mismatch")
+                node.leaf(~F.forall(per_key, lambda ok: ok), "propertyNames",
+                          None, F.lit(None), "propertyNames mismatch")
         else:
             raise ExpressionFallback(f"object keywords on {dtype.simpleString()}")
+        return node.done()
 
-        viols = _gather(spieces, pieces)
-        valid = valids[0] if valids else F.lit(True)
-        for v in valids[1:]:
-            valid = valid & v
-        return valid, viols
+    def _object_keywords(self, node: _Node, cs, count, has, missing, required_missing) -> None:
+        """Property-count, `required` and `dependentRequired` checks of one
+        object, shared by struct and map columns. `count()` builds the
+        property count, called only when a count keyword is set; `has(k)`
+        and `missing(k)` test one key for dependentRequired, and
+        `required_missing(k)` tests one key for required."""
+        if (cs.min_properties is not None or cs.max_properties is not None
+                or cs.const_length is not None):
+            n = count()
+            if cs.min_properties is not None:
+                node.leaf(n < F.lit(int(cs.min_properties)), "minProperties",
+                          cs.min_properties, n, "Too few properties")
+            if cs.max_properties is not None:
+                node.leaf(n > F.lit(int(cs.max_properties)), "maxProperties",
+                          cs.max_properties, n, "Too many properties")
+            if cs.const_length is not None:
+                # any const type incl. string length (schema.js:798-803)
+                node.leaf(n != F.lit(int(cs.const_length)), "const",
+                          cs.const_length, n, "Incorrect number of properties")
+        if cs.required:
+            # the reference emits BOTH rows per object (r3): the
+            # endObject count check (schema.js:810) and the
+            # finish()-time missing-key list in declaration order
+            # (schema.js:1322-1324) — the list rides the dynamic-
+            # expected slot of the compact encoding
+            miss_flags = [required_missing(k) for k in cs.required]
+            miss = [F.when(f, 1).otherwise(0) for f in miss_flags]
+            n_missing = miss[0]
+            for m in miss[1:]:
+                n_missing = n_missing + m
+            any_missing = n_missing > F.lit(0)
+            node.leaf(any_missing, "required", 0, n_missing, "Required property missing")
+            # json.dumps-style per-key literals (escaped at compile
+            # time — keys are static), so the report string is byte-
+            # identical to the evaluator's _show(json.dumps) form
+            miss_list = F.concat(
+                F.lit("["),
+                F.concat_ws(", ", F.array_compact(F.array(*[
+                    F.when(f, F.lit(json.dumps(k, ensure_ascii=False)))
+                    for f, k in zip(miss_flags, cs.required)
+                ]))),
+                F.lit("]"),
+            )
+            node.leaf(any_missing, "required", None, F.lit(None),
+                      "Required properties missing", exp=miss_list)
+        if self.extensions and cs.dependent_required:
+            for k, reqs in sorted(cs.dependent_required.items()):
+                present_k = has(k)
+                for r in reqs:
+                    node.leaf(present_k & missing(r), "dependentRequired", 0, F.lit(1),
+                              "Dependent property missing")

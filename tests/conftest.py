@@ -51,6 +51,18 @@ def stored_rdds(spark) -> set:
     return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
+def jobs_of(spark, group: str, fn):
+    """(fn(), the number of Spark jobs it launched), counted under job
+    group `group`; the group is cleared afterwards, also on error."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def file_scan_rows(spark, first: int = 0) -> tuple[int, int]:
     """(input rows of the stages numbered `first` and up that scan files,
     the number after the last stage), read from the in-process status

@@ -4,6 +4,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import jobs_of
 from jsonschemaparse_spark import SchemaError
 from jsonschemaparse_spark.engine import compile_rule_suite, run_rule_suite
 
@@ -88,19 +89,9 @@ def test_rule_suite_summary_runs_the_row_kernel_once(spark):
          "unique": [{"keys": ["doc_id"]}]},
         key_cols=["doc_id"],
     )
-    sc = spark.sparkContext
-
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setJobGroup("", "")
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    s, suite_jobs = jobs("suite-summary", report.summary)
-    _, row_jobs = jobs("rows-summary", report.row_result.summary)
-    again, again_jobs = jobs("suite-summary-again", report.summary)
+    s, suite_jobs = jobs_of(spark, "suite-summary", report.summary)
+    _, row_jobs = jobs_of(spark, "rows-summary", report.row_result.summary)
+    again, again_jobs = jobs_of(spark, "suite-summary-again", report.summary)
     assert s["pass"] is True and s["rows"]["n_rows"] == docs.count()
     # one job over the row kernel (an aggregate was 2 with AQE: map stage
     # + result; deriving "pass" from a second summary() made it 4)

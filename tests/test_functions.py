@@ -6,6 +6,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import jobs_of
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -125,16 +127,13 @@ def test_ks_drift_two_jobs_and_bounds_param(spark, documents):
     from jsonschemaparse_spark.functions.integrity import ks_drift
 
     shifted = documents.withColumn("n_chars", F.col("n_chars") + 200)
-    sc = spark.sparkContext
 
     # AQE materializes each shuffle stage as its own job, hiding the
     # action count; with it off, jobs == driver actions.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        sc.setJobGroup("ksd2", "ks two-action check")
-        full = ks_drift(documents, shifted, "n_chars")
-        sc.setJobGroup("", "")
-        assert len(sc.statusTracker().getJobIdsForGroup("ksd2")) <= 2
+        full, jobs = jobs_of(spark, "ksd2", lambda: ks_drift(documents, shifted, "n_chars"))
+        assert jobs <= 2
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
@@ -142,10 +141,9 @@ def test_ks_drift_two_jobs_and_bounds_param(spark, documents):
     hi = shifted.agg(F.max("n_chars")).first()[0]
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        sc.setJobGroup("ksd1", "ks one-action check")
-        pre = ks_drift(documents, shifted, "n_chars", bounds=(float(lo), float(hi)))
-        sc.setJobGroup("", "")
-        assert len(sc.statusTracker().getJobIdsForGroup("ksd1")) == 1
+        pre, jobs = jobs_of(spark, "ksd1", lambda: ks_drift(
+            documents, shifted, "n_chars", bounds=(float(lo), float(hi))))
+        assert jobs == 1
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
     assert pre.statistic == full.statistic

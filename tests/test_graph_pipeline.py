@@ -8,6 +8,8 @@ import unicodedata
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
+from conftest import jobs_of
+
 
 # ---------------- connected_components --------------------------------------
 def test_connected_components_basic(spark):
@@ -590,19 +592,17 @@ def test_clean_corpus_perfbench_shape_job_count(spark, tmp_path):
     from jsonschemaparse_spark.functions.pipeline import clean_corpus
 
     df, seen = _perfbench_shaped_corpus(spark, tmp_path)
-    sc = spark.sparkContext
-    sc.setJobGroup("clean-corpus-pin", "perfbench-shaped clean_corpus")
-    try:
+
+    def run():
         res = clean_corpus(
             df, normalize=True, seen_df=seen, span_dedup=True,
             near_dup_threshold=0.7, near_dup_mode="greedy",
             mixture_strata="source", mixture_target_fraction=0.6,
             observe_funnel=True)
         res.cleaned.write.parquet(str(tmp_path / "cleaned"))
-        funnel = res.funnel_counts()
-    finally:
-        sc.setJobGroup("", "")
-    jobs = len(sc.statusTracker().getJobIdsForGroup("clean-corpus-pin"))
+        return res, res.funnel_counts()
+
+    (res, funnel), jobs = jobs_of(spark, "clean-corpus-pin", run)
     res.unpersist()
     assert funnel["n_input"] == 60
     assert funnel["n_after_snapshot"] == 50

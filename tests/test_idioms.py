@@ -5,6 +5,7 @@ on a scan, a shuffled, a persisted or a locally checkpointed frame."""
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import jobs_of
 from jsonschemaparse_spark.idioms import ensure_parallelism
 
 
@@ -32,17 +33,10 @@ def test_one_file_parquet_gets_exactly_one_round_robin(spark, tmp_path):
 def _jobs_of_spread(spark, df, group):
     """(ensure_parallelism(df), Spark jobs it launched), with a positive
     control: an action on `df` in a group of its own is counted."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    sc.setJobGroup(group, "spread of " + group)
-    try:
-        out = ensure_parallelism(df)
-        sc.setJobGroup(group + "-action", "count of " + group)
-        df.count()
-    finally:
-        sc.setJobGroup("", "")
-    assert len(tracker.getJobIdsForGroup(group + "-action")) >= 1
-    return out, len(tracker.getJobIdsForGroup(group))
+    out, jobs = jobs_of(spark, group, lambda: ensure_parallelism(df))
+    _, control = jobs_of(spark, group + "-action", df.count)
+    assert control >= 1
+    return out, jobs
 
 
 def test_probe_launches_no_job_on_plain_file_scan(spark, tmp_path):

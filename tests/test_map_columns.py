@@ -82,3 +82,41 @@ def test_map_agrees_with_evaluator(spark, mdf):
     for r in mdf.collect():
         want, _ = validate_instance(rules_m, dict(r["m"]), extensions=True)
         assert got[r["id"]] == want, (r["id"], dict(r["m"]))
+
+
+def test_struct_and_map_objects_report_the_same_rows(spark):
+    """Struct and map columns share one copy of the object keywords: the
+    same objects report the same rows under either column type, also for
+    a required key the struct has no field for."""
+    objects = [
+        {"alpha": 1, "beta": 2},
+        {"alpha": 1},
+        {},
+        {"alpha": 1, "beta": 2, "gamma": 3},
+    ]
+    rules = {"properties": {"o": {
+        "required": ["alpha", "zeta"], "minProperties": 2, "maxProperties": 2,
+        "dependentRequired": {"alpha": ["beta"], "gamma": ["zeta"]},
+    }}}
+    as_struct = spark.createDataFrame(
+        [(i, (o.get("alpha"), o.get("beta"), o.get("gamma")))
+         for i, o in enumerate(objects)],
+        "id int, o struct<alpha:int,beta:int,gamma:int>")
+    as_map = spark.createDataFrame(list(enumerate(objects)), "id int, o map<string,int>")
+
+    def report(df):
+        res = validate_dataframe(df, rules, key_cols=["id"], fallback="never")
+        rows = {}
+        for r in res.violations().collect():
+            rows.setdefault(r["id"], []).append(
+                (r["keyword"], r["path"], r["expected"], r["actual"], r["message"]))
+        return _valids(res), {i: sorted(v) for i, v in rows.items()}
+
+    struct_valids, struct_rows = report(as_struct)
+    map_valids, map_rows = report(as_map)
+    assert struct_valids == map_valids == {0: False, 1: False, 2: False, 3: False}
+    assert struct_rows == map_rows
+    assert {kw for rows in map_rows.values() for kw, *_ in rows} == {
+        "required", "minProperties", "maxProperties", "dependentRequired"}
+    assert ("required", "/o", '["zeta"]', None, "Required properties missing") \
+        in map_rows[0]

@@ -4,6 +4,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import jobs_of
+
 RULES = {
     "type": "object",
     "required": ["url", "text", "lang"],
@@ -520,16 +522,6 @@ def _three_files(spark, path):
     ).repartition(3).write.parquet(path)
 
 
-def _jobs_of(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_checkpoint_runners_free_their_evaluation_blocks(spark, tmp_path,
                                                          monkeypatch):
     """Both state writes of a run read each result's checkpointed
@@ -570,10 +562,10 @@ def test_checkpoint_state_columns_and_cold_run_jobs(spark, tmp_path):
     _three_files(spark, data)
     row_state, json_state = str(tmp_path / "row_state"), str(tmp_path / "json_state")
 
-    run, row_jobs = _jobs_of(spark, "ckpt-row-cold", lambda: run_with_checkpoint(
+    run, row_jobs = jobs_of(spark, "ckpt-row-cold", lambda: run_with_checkpoint(
         spark, data, ROW_RULES, row_state, key_cols=["id"]))
     assert run.n_files_total == 3
-    jrun, json_jobs = _jobs_of(spark, "ckpt-json-cold", lambda: run_json_with_checkpoint(
+    jrun, json_jobs = jobs_of(spark, "ckpt-json-cold", lambda: run_json_with_checkpoint(
         spark, data, "doc", JSON_RULES, json_state, key_cols=["id"]))
     assert jrun.n_files_total == 3
     # the counts of this input (Spark 4.1.2, local[4], AQE on): listing
@@ -583,24 +575,24 @@ def test_checkpoint_state_columns_and_cold_run_jobs(spark, tmp_path):
     assert row_jobs <= 5 and json_jobs <= 5, (row_jobs, json_jobs)
     # the row runner's violations are read back from its batch: writing
     # them scans those files and runs no validator
-    _, write_jobs = _jobs_of(spark, "ckpt-row-out", lambda: run.violations.write
-                             .parquet(str(tmp_path / "out")))
+    _, write_jobs = jobs_of(spark, "ckpt-row-out", lambda: run.violations.write
+                            .parquet(str(tmp_path / "out")))
     # a resume learns its done set from the commit log, on the driver, and
     # with nothing pending reads no footer: its empty violations take the
     # key types the last batch recorded
-    resumed, resume_jobs = _jobs_of(spark, "ckpt-row-resume", lambda: run_with_checkpoint(
+    resumed, resume_jobs = jobs_of(spark, "ckpt-row-resume", lambda: run_with_checkpoint(
         spark, data, ROW_RULES, row_state, key_cols=["id"]))
     assert resumed.n_files_skipped == 3
     assert resumed.violations.columns == ["id"] + REPORT_COLS
     assert resumed.violations.schema["id"].dataType.simpleString() == "bigint"
-    jresumed, json_resume_jobs = _jobs_of(spark, "ckpt-json-resume", lambda: (
+    jresumed, json_resume_jobs = jobs_of(spark, "ckpt-json-resume", lambda: (
         run_json_with_checkpoint(spark, data, "doc", JSON_RULES, json_state,
                                  key_cols=["id"])))
     assert jresumed.n_files_skipped == 3 and jresumed.engine_used == "none"
     assert resume_jobs == json_resume_jobs == 0, (resume_jobs, json_resume_jobs)
     # a reprocess reads this snapshot's clean flags (one job) and
     # rewrites nothing
-    rerun, reprocess_jobs = _jobs_of(spark, "ckpt-json-reprocess", lambda: (
+    rerun, reprocess_jobs = jobs_of(spark, "ckpt-json-reprocess", lambda: (
         run_json_with_checkpoint(spark, data, "doc", JSON_RULES, json_state,
                                  key_cols=["id"], reprocess=True)))
     assert rerun.n_files_typed == 3
